@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: print `explain("formatted")` for named SparkEntry queries
   * (plan audits beyond the PlanShapeSpec string asserts).
@@ -7,13 +6,7 @@ import org.apache.spark.sql.SparkSession
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local("8")
     spark.sparkContext.setLogLevel("ERROR")
     for (q <- args) {
       println(s"===== $q =====")

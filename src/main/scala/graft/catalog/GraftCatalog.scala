@@ -18,7 +18,7 @@ import org.apache.spark.sql.sources.{EqualTo, Filter, InsertableRelation}
 import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.store.{SnapshotLog, UpsertTable}
+import graft.store.{Snapshot, SnapshotLog, UpsertTable}
 
 /** SQL addressability for the upsert store (SURVEY.md §2.1 S7, §2.4
   * Q-d/Q-f): a `TableCatalog` + `SupportsNamespaces` over a warehouse
@@ -58,8 +58,18 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
 
   private def spark: SparkSession = SparkSession.active
 
+  /** The warehouse directory `segments` name. Each passes the TVFs'
+    * [[TvfResolve.requireSafe]] gate first, so no quoted `/abs` or `..`
+    * segment can address (or drop) a directory outside the warehouse.
+    */
+  private def dirOf(segments: Array[String]): Path = {
+    segments.foreach(TvfResolve.requireSafe(_, msg =>
+      throw new IllegalArgumentException(s"catalog $catalogName: $msg")))
+    segments.foldLeft(warehouse)(_.resolve(_))
+  }
+
   private def tablePath(ident: Identifier): Path =
-    ident.namespace().foldLeft(warehouse)(_.resolve(_)).resolve(ident.name())
+    dirOf(ident.namespace() :+ ident.name())
 
   private def isTableDir(p: Path): Boolean =
     Files.isDirectory(p.resolve("_snapshots"))
@@ -67,7 +77,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
   // ---- TableCatalog ----
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
-    val dir = namespace.foldLeft(warehouse)(_.resolve(_))
+    val dir = dirOf(namespace)
     if (!Files.isDirectory(dir)) throw new NoSuchNamespaceException(namespace)
     graft.Fs.children(dir)
       .filter(isTableDir)
@@ -77,9 +87,15 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
 
   override def tableExists(ident: Identifier): Boolean = isTableDir(tablePath(ident))
 
+  /** The table pinned to its current snapshot: the query reads that
+    * snapshot only; writes re-resolve inside [[UpsertTable.merge]]
+    * (see [[GraftSqlTable]]).
+    */
   override def loadTable(ident: Identifier): Table = {
     val p = tablePath(ident)
-    if (isTableDir(p)) return new GraftSqlTable(ident, UpsertTable(spark, p.toString))
+    val current = SnapshotLog.current(p.toString)
+    if (current.nonEmpty)
+      return new GraftSqlTable(ident, UpsertTable(spark, p.toString), current.get)
     // Iceberg-style metadata tables (`SELECT * FROM cat.ns.t.snapshots`)
     // — the snapshot_mgmt.py introspection role as SQL. Resolution:
     // the name itself is not a table, but its parent is.
@@ -103,7 +119,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     val p = tablePath(ident)
     if (!isTableDir(p)) throw new NoSuchTableException(ident)
     new GraftSqlTable(ident, UpsertTable(spark, p.toString),
-      travelVersion = Some(version.toLong))
+      SnapshotLog.read(p.toString, version.toLong))
   }
 
   /** Time travel (`TIMESTAMP AS OF t`) — Spark hands micros since
@@ -121,8 +137,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
       .find(_.timestampMs <= tsMs)
       .getOrElse(throw new IllegalArgumentException(
         s"no snapshot of $ident committed at or before epoch ${tsMs} ms"))
-    new GraftSqlTable(ident, UpsertTable(spark, loc),
-      travelVersion = Some(at.version))
+    new GraftSqlTable(ident, UpsertTable(spark, loc), at)
   }
 
   override def createTable(ident: Identifier, schema: StructType,
@@ -132,9 +147,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
         "CREATE TABLE requires TBLPROPERTIES('keys'='k1,k2') — the " +
           "PRIMARY KEY NOT ENFORCED analog (flink_json_to_iceberg.py:66)"))
     val buckets = Option(properties.get("buckets")).map(_.toInt).getOrElse(0)
-    val t = UpsertTable(spark, tablePath(ident).toString)
-    t.create(schema, keys, buckets)
-    new GraftSqlTable(ident, t)
+    UpsertTable(spark, tablePath(ident).toString).create(schema, keys, buckets)
+    loadTable(ident)
   }
 
   /** SQL schema evolution, routed through the store's evolve
@@ -171,7 +185,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
         s"unsupported ALTER TABLE change: $other")
     }}
     store.evolveSchema(target)
-    new GraftSqlTable(ident, store)
+    loadTable(ident)
   }
 
   override def dropTable(ident: Identifier): Boolean = {
@@ -199,7 +213,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
 
   override def listNamespaces(namespace: Array[String]): Array[Array[String]] = {
     if (namespace.isEmpty) return listNamespaces()
-    val dir = namespace.foldLeft(warehouse)(_.resolve(_))
+    val dir = dirOf(namespace)
     if (!Files.isDirectory(dir)) throw new NoSuchNamespaceException(namespace)
     graft.Fs.children(dir)
       .filter(p => Files.isDirectory(p) && !isTableDir(p))
@@ -208,24 +222,24 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
   }
 
   override def namespaceExists(namespace: Array[String]): Boolean =
-    Files.isDirectory(namespace.foldLeft(warehouse)(_.resolve(_)))
+    Files.isDirectory(dirOf(namespace))
 
   override def loadNamespaceMetadata(namespace: Array[String]): util.Map[String, String] = {
     if (!namespaceExists(namespace)) throw new NoSuchNamespaceException(namespace)
     Map(SupportsNamespaces.PROP_LOCATION ->
-      namespace.foldLeft(warehouse)(_.resolve(_)).toString).asJava
+      dirOf(namespace).toString).asJava
   }
 
   override def createNamespace(namespace: Array[String],
       metadata: util.Map[String, String]): Unit =
-    Files.createDirectories(namespace.foldLeft(warehouse)(_.resolve(_)))
+    Files.createDirectories(dirOf(namespace))
 
   override def alterNamespace(namespace: Array[String],
       changes: NamespaceChange*): Unit =
     throw new UnsupportedOperationException("namespace metadata is immutable")
 
   override def dropNamespace(namespace: Array[String], cascade: Boolean): Boolean = {
-    val dir = namespace.foldLeft(warehouse)(_.resolve(_))
+    val dir = dirOf(namespace)
     if (!Files.isDirectory(dir)) false
     else {
       val empty = graft.Fs.children(dir).isEmpty
@@ -245,22 +259,25 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
   * the store's only write semantic, matching the reference's
   * `write.upsert.enabled` tables where INSERT replaces rows with equal
   * keys). Time travel and maintenance stay on the store API.
+  *
+  * Isolation: a query reads exactly `snapshot`, resolved once when the
+  * catalog loaded the table (current, `VERSION AS OF` or `TIMESTAMP AS
+  * OF`). Schema, key pruning, the scan's files and [[GraftDeltaReadRule]]'s
+  * overlay all derive from it, so a commit landing after analysis is
+  * never seen. Writes re-resolve inside [[UpsertTable.merge]].
   */
 private[catalog] class GraftSqlTable(ident: Identifier,
     private[catalog] val store: UpsertTable,
-    private[catalog] val travelVersion: Option[Long] = None)
+    private[catalog] val snapshot: Snapshot)
     extends Table with SupportsRead with SupportsWrite {
 
   override def name(): String = ident.toString
-  override def schema(): StructType = travelVersion match {
-    case Some(v) => store.schemaAt(v)
-    case None => store.schema
-  }
+  override def schema(): StructType = snapshot.schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
       TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE)
   override def properties(): util.Map[String, String] =
-    Map("keys" -> store.keyCols.mkString(",")).asJava
+    Map("keys" -> snapshot.keyCols.mkString(",")).asJava
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder
@@ -284,11 +301,10 @@ private[catalog] class GraftSqlTable(ident: Identifier,
       override def pushedFilters(): Array[Filter] =
         pruneKeys.map(m => m.map { case (k, v) => EqualTo(k, v): Filter }.toArray)
           .getOrElse(Array.empty)
-      // prune only on current-version reads (time travel keeps it simple)
       private def pruneKeys: Option[Map[String, Any]] = {
         val keyEq = filters.collect { case EqualTo(a, v) => a -> v }.toMap
-        if (travelVersion.isEmpty && store.keyCols.forall(keyEq.contains))
-          Some(keyEq.filter { case (k, _) => store.keyCols.contains(k) })
+        if (snapshot.keyCols.forall(keyEq.contains))
+          Some(keyEq.filter { case (k, _) => snapshot.keyCols.contains(k) })
         else None
       }
       override def build(): Scan = {
@@ -298,14 +314,14 @@ private[catalog] class GraftSqlTable(ident: Identifier,
         // any scan is built, so reaching here with deltas means the
         // session is missing graft.GraftExtensions: fail loudly
         // rather than serve stale base rows and tombstones
-        require(!store.hasDeltasAt(travelVersion),
+        require(!snapshot.hasDeltas,
           s"table ${name()} has merge-on-read delta files; reads require " +
             "spark.sql.extensions=graft.GraftExtensions (or compact() first)")
         // three pruning layers before a byte is read: key-bucket
         // (equality lookups), manifest min/max file skipping (range /
         // equality / null predicates), then parquet row-group stats
         // inside the files that survive
-        val paths = store.dataFiles(travelVersion, pruneKeys, filters.toSeq)
+        val paths = store.dataFiles(snapshot, pruneKeys, filters.toSeq)
           .map(new HadoopPath(_)).toSeq
         // snapshot-pinned file listing: the index is built from the
         // manifest's explicit file list, so concurrent commits never

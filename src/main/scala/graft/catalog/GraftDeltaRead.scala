@@ -38,17 +38,13 @@ case class GraftDeltaReadRule(session: SparkSession) extends Rule[LogicalPlan] {
 
   private def needsOverlay(r: DataSourceV2Relation): Boolean =
     r.table match {
-      case t: GraftSqlTable => t.store.hasDeltasAt(t.travelVersion)
+      case t: GraftSqlTable => t.snapshot.hasDeltas
       case _ => false
     }
 
   private def overlay(r: DataSourceV2Relation): LogicalPlan = {
     val t = r.table.asInstanceOf[GraftSqlTable]
-    val df = t.travelVersion match {
-      case Some(v) => t.store.readVersion(v)
-      case None => t.store.read()
-    }
-    val merged = df.queryExecution.analyzed
+    val merged = t.store.readSnapshot(t.snapshot).queryExecution.analyzed
     // graft the overlay under the relation's attribute ids so every
     // reference above the former relation still resolves
     Project(r.output.map { to =>

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
-import graft.store.UpsertTable
+import graft.store.{Snapshot, UpsertTable}
 
 /** SQL `MERGE INTO` for store tables, translated to the store's native
   * keyed upsert merge (the same path every streaming sink commit takes)
@@ -58,8 +58,8 @@ case class GraftMergeRule(session: SparkSession) extends Rule[LogicalPlan] {
     */
   private def translateDelete(cond: Expression,
       rel: DataSourceV2Relation): LogicalPlan = {
-    val store = storeOf(rel)
-    val keys = store.keyCols.map(n => rel.output.find(_.name == n).get)
+    val (store, snap) = storeOf(rel)
+    val keys = snap.keyCols.map(n => rel.output.find(_.name == n).get)
     val batch = Project(
       keys :+ Alias(Literal("d"), "__merge_op")(),
       Filter(cond, rel))
@@ -73,14 +73,14 @@ case class GraftMergeRule(session: SparkSession) extends Rule[LogicalPlan] {
     */
   private def translateUpdate(assignments: Seq[Assignment],
       cond: Option[Expression], rel: DataSourceV2Relation): LogicalPlan = {
-    val store = storeOf(rel)
+    val (store, snap) = storeOf(rel)
     val assigned = assignments.map {
       case Assignment(k: AttributeReference, v) => k.name -> v
       case other => fail(s"UPDATE assigns a non-column target: ${other.sql}")
     }.toMap
-    store.keyCols.filter(assigned.contains).foreach(k =>
+    snap.keyCols.filter(assigned.contains).foreach(k =>
       fail(s"cannot UPDATE key column $k (delete + insert instead)"))
-    val proj = store.schema.fieldNames.toSeq.map { n =>
+    val proj = snap.schema.fieldNames.toSeq.map { n =>
       assigned.get(n)
         .map(v => Alias(v, n)(): NamedExpression)
         .getOrElse(rel.output.find(_.name == n).get)
@@ -89,10 +89,11 @@ case class GraftMergeRule(session: SparkSession) extends Rule[LogicalPlan] {
     GraftMergeCommand(store.location, batch, None)
   }
 
-  private def storeOf(rel: DataSourceV2Relation): UpsertTable = {
+  /** The target store and the snapshot its relation was loaded at. */
+  private def storeOf(rel: DataSourceV2Relation): (UpsertTable, Snapshot) = {
     val table = rel.table.asInstanceOf[GraftSqlTable]
-    if (table.travelVersion.isDefined) fail("cannot write to a time-travel read")
-    table.store
+    if (rel.timeTravelSpec.isDefined) fail("cannot write to a time-travel read")
+    (table.store, table.snapshot)
   }
 
   private def graftRelation(plan: LogicalPlan): Option[DataSourceV2Relation] =
@@ -104,9 +105,7 @@ case class GraftMergeRule(session: SparkSession) extends Rule[LogicalPlan] {
     throw new UnsupportedOperationException(s"MERGE INTO graft store: $msg")
 
   private def translate(m: MergeIntoTable, rel: DataSourceV2Relation): LogicalPlan = {
-    val table = rel.table.asInstanceOf[GraftSqlTable]
-    if (table.travelVersion.isDefined) fail("cannot merge into a time-travel read")
-    val store = table.store
+    val (store, snap) = storeOf(rel)
     val targetAttrs = AttributeSet(rel.output)
     val sourceAttrs = m.sourceTable.outputSet
 
@@ -122,8 +121,8 @@ case class GraftMergeRule(session: SparkSession) extends Rule[LogicalPlan] {
           if targetAttrs.contains(b) && sourceAttrs.contains(a) => b.name
       case other => fail(s"ON must be target-key = source-column equality, got: ${other.sql}")
     }
-    if (onKeys.toSet != store.keyCols.toSet)
-      fail(s"ON must cover exactly the key columns ${store.keyCols.mkString(", ")}")
+    if (onKeys.toSet != snap.keyCols.toSet)
+      fail(s"ON must cover exactly the key columns ${snap.keyCols.mkString(", ")}")
 
     // full-sync form: target keys the source no longer carries are
     // deleted. This is the ONE merge branch that must look at the
@@ -174,7 +173,7 @@ case class GraftMergeRule(session: SparkSession) extends Rule[LogicalPlan] {
         case Assignment(k: AttributeReference, v) => k.name -> v
         case other => fail(s"$label assigns a non-column target: ${other.sql}")
       }
-      val cols = store.schema.fieldNames.toSet
+      val cols = snap.schema.fieldNames.toSet
       if (pairs.map(_._1).toSet != cols)
         fail(s"$label must assign every column (${cols.mkString(", ")}) — " +
           "the store replaces whole rows, it does not patch columns")
@@ -192,7 +191,7 @@ case class GraftMergeRule(session: SparkSession) extends Rule[LogicalPlan] {
       Alias(If(d, Literal("d"), Literal("u")), "__merge_op")()
     }
     val batch = Project(
-      store.schema.fieldNames.toSeq.map(n => Alias(insertVals(n), n)()) ++ opCol,
+      snap.schema.fieldNames.toSeq.map(n => Alias(insertVals(n), n)()) ++ opCol,
       m.sourceTable)
     GraftMergeCommand(store.location, batch, opCol.map(_.name), pruneUnmatched)
   }

@@ -59,7 +59,6 @@ private[catalog] object GraftMetadataTable {
     new GraftMetadataTable(name, SnapshotsSchema, () =>
       SnapshotLog.listVersions(tableRoot).map { v =>
         val s = SnapshotLog.read(tableRoot, v)
-        val ddl = DataType.fromJson(s.schemaJson).asInstanceOf[StructType].toDDL
         new GenericInternalRow(Array[Any](
           s.version,
           UTF8String.fromString(s.operation),
@@ -67,7 +66,7 @@ private[catalog] object GraftMetadataTable {
           s.numBuckets,
           s.files.size,
           UTF8String.fromString(s.keyCols.mkString(",")),
-          UTF8String.fromString(ddl))): InternalRow
+          UTF8String.fromString(s.schema.toDDL))): InternalRow
       }.toArray)
 
   /** One row per data file of the CURRENT snapshot. */

@@ -142,7 +142,7 @@ object CdcSink {
       // per-record dynamic routing; table count is bounded (the
       // connector's topics.regex match list), so collecting it is safe
       val tables = meta.select("__table").distinct().collect().map(_.getString(0))
-      tables.sorted.foreach { table =>
+      val versions = tables.sorted.map { table =>
         val rows = meta.where(col("__table") === table)
         val target = UpsertTable(spark, targetPath(warehouseDir, table))
         val evolve =
@@ -172,10 +172,8 @@ object CdcSink {
           .orderBy(col("__lsn").desc_nulls_last, col("__txid").desc_nulls_last)
           .select("__schema").as(Encoders.STRING)
           .take(1).headOption.flatMap(ConnectSchema.rowSchema)
-        val cachedSchema =
-          if (!target.exists) None
-          else Some(payloadSchemaFor(target.schema,
-            microTsCols.getOrElse(table, Seq.empty)))
+        val cachedSchema = target.currentSnapshot.map(s =>
+          payloadSchemaFor(s.schema, microTsCols.getOrElse(table, Seq.empty)))
         def bareSchema = cachedSchema match {
           case None => infer()
           case Some(cached) =>
@@ -252,24 +250,19 @@ object CdcSink {
             else ConnectSchema.materialize(c, logical)
               .map(e => df.withColumn(c, e)).getOrElse(df)
           }
-        UpsertTable(spark, targetPath(warehouseDir, table)).merge(
+        table -> target.merge(
           converted,
           opCol = Some("__op"),
           orderCol = Some("__ord"),
           streamId = streamId,
           batchId = batchId,
-          autoCreateKeys = keyColsFor(table))
-      }
+          autoCreateKeys = keyColsFor(table)).version
+      }.toMap
       // every table of the batch has committed (merges above are
       // sequential and replay-guarded) — publish the cross-table
-      // consistency point. See [[BatchCursor]] for the crash analysis.
-      batchId.foreach { id =>
-        BatchCursor.commit(warehouseDir, id,
-          tables.map { t =>
-            t -> UpsertTable(spark, targetPath(warehouseDir, t))
-              .currentSnapshot.get.version
-          }.toMap)
-      }
+      // consistency point from the versions they returned. See
+      // [[BatchCursor]] for the crash analysis.
+      batchId.foreach(BatchCursor.commit(warehouseDir, _, versions))
     } finally meta.unpersist()
   }
 

@@ -1031,6 +1031,7 @@ object StoreQueries {
               orderCol = Some("_commit_version"),
               streamId = Some("q301"), batchId = Some(batchId),
               autoCreateKeys = Seq("user_id"), delta = true)
+            ()
           }
           .start()
         q.awaitTermination()

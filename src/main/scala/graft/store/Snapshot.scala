@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** One committed version of an [[UpsertTable]] — the analog of an
   * Iceberg v2 snapshot (reference: flink_json_to_iceberg.py:68-69
@@ -46,7 +47,15 @@ case class Snapshot(
     committed: Map[String, Long],
     timestampMs: Long,
     operation: String = "",
-    lookupCols: Seq[String] = Nil)
+    lookupCols: Seq[String] = Nil) {
+
+  /** The table schema this version was committed under. */
+  def schema: StructType =
+    DataType.fromJson(schemaJson).asInstanceOf[StructType]
+
+  /** Whether this version carries merge-on-read delta files. */
+  def hasDeltas: Boolean = files.exists(FileEntry.isDelta)
+}
 
 /** One data file: manifest-relative path, key-hash bucket, per-column
   * bounds for planning-time file skipping (see [[FileStats]]; empty

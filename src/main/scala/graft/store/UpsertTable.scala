@@ -33,12 +33,11 @@ class UpsertTable(spark: SparkSession, val location: String) {
 
   private def root: Path = Paths.get(location)
 
-  def exists: Boolean = SnapshotLog.current(location).isDefined
+  def exists: Boolean = currentSnapshot.isDefined
 
   def currentSnapshot: Option[Snapshot] = SnapshotLog.current(location)
 
-  def schema: StructType =
-    DataType.fromJson(snapshotOrFail.schemaJson).asInstanceOf[StructType]
+  def schema: StructType = snapshotOrFail.schema
 
   def keyCols: Seq[String] = snapshotOrFail.keyCols
 
@@ -53,26 +52,31 @@ class UpsertTable(spark: SparkSession, val location: String) {
     * only a tiny fraction of the table.
     */
   def create(schema: StructType, keys: Seq[String],
-      numBuckets: Int = 0): Unit = {
+      numBuckets: Int = 0): Unit =
+    createOver(currentSnapshot, schema, keys, numBuckets)
+
+  /** [[create]] over the resolved current snapshot `cur`: returns it,
+    * or commits and returns version 1. */
+  private def createOver(cur: Option[Snapshot], schema: StructType,
+      keys: Seq[String], numBuckets: Int): Snapshot = {
     val buckets =
       if (numBuckets > 0) numBuckets
       else spark.conf.getOption(BucketsConf).map(_.toInt).getOrElse(DefaultBuckets)
     require(keys.nonEmpty, "upsert table needs key columns")
     keys.foreach(k => require(schema.fieldNames.contains(k), s"missing key col $k"))
-    if (exists) return
-    Files.createDirectories(root)
-    SnapshotLog.commit(location, Snapshot(
-      version = 1L,
-      schemaJson = allNullable(schema).json,
-      keyCols = keys,
-      numBuckets = buckets,
-      files = Seq.empty,
-      committed = Map.empty,
-      timestampMs = System.currentTimeMillis(),
-      operation = "create",
-      lookupCols = spark.conf.getOption(LookupBloomsConf)
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-        .getOrElse(Nil)))
+    cur.getOrElse {
+      Files.createDirectories(root)
+      publish(Snapshot(
+        version = 1L,
+        schemaJson = allNullable(schema).json,
+        keyCols = keys,
+        numBuckets = buckets,
+        files = Seq.empty,
+        committed = Map.empty,
+        timestampMs = System.currentTimeMillis(),
+        operation = "create",
+        lookupCols = confLookupCols))
+    }
   }
 
   /** Current-state read: a plain vectorized scan when the snapshot is
@@ -82,16 +86,8 @@ class UpsertTable(spark: SparkSession, val location: String) {
     */
   def read(): DataFrame = readSnapshot(snapshotOrFail)
 
-  /** Whether the current snapshot carries merge-on-read delta files
-    * (readers need the overlay; [[compact]] restores pure base).
-    */
-  def hasDeltas: Boolean = hasDeltasAt(None)
-
-  /** [[hasDeltas]] for a pinned version (time-travel reads). */
-  def hasDeltasAt(version: Option[Long]): Boolean = {
-    val snap = version.map(SnapshotLog.read(location, _)).getOrElse(snapshotOrFail)
-    snap.files.exists(FileEntry.isDelta)
-  }
+  /** Whether the current snapshot carries merge-on-read delta files. */
+  def hasDeltas: Boolean = snapshotOrFail.hasDeltas
 
   /** Time travel: read a specific committed version (Iceberg snapshot
     * read analog; enables the expiry semantics of snapshot_mgmt.py).
@@ -117,7 +113,7 @@ class UpsertTable(spark: SparkSession, val location: String) {
   def bucketFingerprints(version: Option[Long] = None): DataFrame = {
     val snap = version.map(SnapshotLog.read(location, _))
       .getOrElse(snapshotOrFail)
-    val df = version.map(readVersion).getOrElse(read())
+    val df = readSnapshot(snap)
     df.withColumn("__rh", UpsertTable.rowFingerprint(df.columns))
       .withColumn("__b",
         UpsertTable.bucketExpr(snap.keyCols, snap.numBuckets))
@@ -125,11 +121,6 @@ class UpsertTable(spark: SparkSession, val location: String) {
       .agg(count(lit(1)).as("n_rows"),
         sum(expr("cast(__rh as decimal(38,0))")).as("fp"))
   }
-
-  /** Schema as of a committed version (time-travel reads). */
-  def schemaAt(version: Long): StructType =
-    DataType.fromJson(SnapshotLog.read(location, version).schemaJson)
-      .asInstanceOf[StructType]
 
   /** Commit history, newest first: (version, operation, timestampMs) —
     * the DESCRIBE HISTORY surface. */
@@ -160,11 +151,10 @@ class UpsertTable(spark: SparkSession, val location: String) {
     */
   def readChanges(fromVersionExclusive: Long,
       toVersionInclusive: Long): DataFrame = {
-    val targetSchema = schemaAt(toVersionInclusive)
+    val targetSchema = SnapshotLog.read(location, toVersionInclusive).schema
     val frames = changeFeedEntries(fromVersionExclusive, toVersionInclusive)
       .map { case (v, s, deltas) =>
-        val sch = DataType.fromJson(s.schemaJson).asInstanceOf[StructType]
-        val deltaSchema = StructType(sch.fields ++ Seq(
+        val deltaSchema = StructType(s.schema.fields ++ Seq(
           StructField(OpCol, StringType), StructField(SeqCol, LongType)))
         alignTypes(readFiles(deltas, deltaSchema), targetSchema)
           .select((targetSchema.fieldNames.map(col) :+
@@ -235,12 +225,12 @@ class UpsertTable(spark: SparkSession, val location: String) {
     * evaluated driver-side (a literal hashes identically to a column).
     */
   def bucketFor(keyValues: Map[String, Any]): Option[Int] =
-    bucketForUnder(snapshotOrFail, keyValues, snapshotOrFail.numBuckets)
+    Some(snapshotOrFail).flatMap(s => bucketForUnder(s, keyValues, s.numBuckets))
 
   private def bucketForUnder(snap: Snapshot, keyValues: Map[String, Any],
       n: Int): Option[Int] = {
     if (!snap.keyCols.forall(keyValues.contains)) return None
-    val sch = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
+    val sch = snap.schema
     val exprs = snap.keyCols.map { k =>
       org.apache.spark.sql.catalyst.expressions.Literal
         .create(keyValues(k), sch(k).dataType)
@@ -272,8 +262,8 @@ class UpsertTable(spark: SparkSession, val location: String) {
   def readWhere(keyValues: Map[String, Any]): DataFrame = {
     val snap = snapshotOrFail
     keyPrunedFiles(snap, keyValues) match {
-      case Some(sel) => mergedView(sel, schema, snap.keyCols)
-      case None => read()
+      case Some(sel) => mergedView(sel, snap.schema, snap.keyCols)
+      case None => readSnapshot(snap)
     }
   }
 
@@ -315,36 +305,33 @@ class UpsertTable(spark: SparkSession, val location: String) {
     */
   def readLookup(column: String, values: Seq[Any]): DataFrame = {
     val snap = snapshotOrFail
-    val sch = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
-    mergedView(lookupFiles(column, values), sch, snap.keyCols)
+    mergedView(lookupFiles(column, values), snap.schema, snap.keyCols)
       .where(col(column).isin(values: _*))
   }
 
-  /** Absolute data-file paths of a snapshot (current when `version` is
-    * None), restricted to the single key bucket when a full
+  /** Absolute data-file paths of `snap` (the current snapshot by
+    * default), restricted to the single key bucket when a full
     * key-equality map is given, then skipped against each file's
     * manifest column bounds for the pushed `filters` (planning-time
     * data skipping; see [[FileStats]]) — feeds the catalog's DSv2
     * scan, which hands them straight to Spark's vectorized parquet
     * reader.
     */
-  def dataFiles(version: Option[Long] = None,
+  def dataFiles(snap: Snapshot = snapshotOrFail,
       pruneKeys: Option[Map[String, Any]] = None,
       filters: Seq[org.apache.spark.sql.sources.Filter] = Seq.empty)
       : Seq[String] = {
-    val snap = version.map(SnapshotLog.read(location, _)).getOrElse(snapshotOrFail)
     val bucketed = pruneKeys.flatMap(keyPrunedFiles(snap, _))
       .getOrElse(snap.files)
-    val sch = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
+    val sch = snap.schema
     val kept = bucketed.filter(f =>
       filters.forall(FileStats.mightMatch(f.stats, sch, _)))
     kept.map(f => s"$location/${f.path}")
   }
 
-  private def readSnapshot(s: Snapshot): DataFrame = {
-    val schema = DataType.fromJson(s.schemaJson).asInstanceOf[StructType]
-    mergedView(s.files, schema, s.keyCols)
-  }
+  /** Current-state read of one resolved snapshot (see [[read]]). */
+  def readSnapshot(s: Snapshot): DataFrame =
+    mergedView(s.files, s.schema, s.keyCols)
 
   /** Current-state view over a file subset: base files verbatim when
     * no deltas are present (the zero-overhead fast path — a single
@@ -412,6 +399,8 @@ class UpsertTable(spark: SparkSession, val location: String) {
     *                 reader cannot serve falls back to the full
     *                 rewrite (the manifest schema must stay readable
     *                 over every live file).
+    * @return the snapshot this merge committed — or, for a replayed
+    *         batch, the current one it left untouched
     */
   def merge(
       batch: DataFrame,
@@ -421,27 +410,26 @@ class UpsertTable(spark: SparkSession, val location: String) {
       batchId: Option[Long] = None,
       autoCreateKeys: Seq[String] = Seq.empty,
       autoCreateBuckets: Int = 0,
-      delta: Boolean = false): Unit = synchronized {
+      delta: Boolean = false): Snapshot = synchronized {
     val metaCols = opCol.toSeq ++ orderCol.toSeq
     val batchDataSchema = StructType(
       batch.schema.fields.filterNot(f => metaCols.contains(f.name)))
 
-    if (!exists) {
+    val snap = currentSnapshot.getOrElse {
       require(autoCreateKeys.nonEmpty,
         s"table $location does not exist and no autoCreateKeys given")
-      create(batchDataSchema, autoCreateKeys, autoCreateBuckets)
+      createOver(None, batchDataSchema, autoCreateKeys, autoCreateBuckets)
     }
-    val snap = snapshotOrFail
 
     // exactly-once: replayed micro-batches are no-ops (C4)
     val replayed = for {
       sid <- streamId; bid <- batchId; last <- snap.committed.get(sid)
     } yield bid <= last
-    if (replayed.contains(true)) return
+    if (replayed.contains(true)) return snap
 
     // schema evolution (S6): additive columns; numeric widening;
     // anything else incompatible is rejected
-    val oldSchema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
+    val oldSchema = snap.schema
     val (newSchema, _) = evolve(oldSchema, batchDataSchema)
     val dataCols = newSchema.fieldNames.toSeq
 
@@ -520,9 +508,9 @@ class UpsertTable(spark: SparkSession, val location: String) {
           .repartition(math.max(affected.size, 1), col("__bucket"))
           .sortWithinPartitions(col("__bucket") +: snap.keyCols.map(col): _*)
           .write.partitionBy("__bucket").mode("overwrite").parquet(outDir)
-        val newFiles = newFileEntries(outDir, newSchema)
+        val newFiles = newFileEntries(outDir, newSchema, snap.lookupCols)
           .map(_.copy(kind = FileEntry.Delta, seq = version))
-        SnapshotLog.commit(location, snap.copy(
+        return publish(snap.copy(
           version = version,
           schemaJson = newSchema.json,
           files = snap.files ++ newFiles,
@@ -530,7 +518,6 @@ class UpsertTable(spark: SparkSession, val location: String) {
             (for { s <- streamId; b <- batchId } yield s -> b),
           timestampMs = System.currentTimeMillis(),
           operation = "delta-merge"))
-        return
       }
 
       val (oldAffected, untouched) = snap.files.partition(f =>
@@ -558,9 +545,9 @@ class UpsertTable(spark: SparkSession, val location: String) {
         .sortWithinPartitions(col("__bucket") +: snap.keyCols.map(col): _*)
         .write.partitionBy("__bucket").mode("overwrite").parquet(outDir)
 
-      val newFiles = newFileEntries(outDir, newSchema)
+      val newFiles = newFileEntries(outDir, newSchema, snap.lookupCols)
 
-      SnapshotLog.commit(location, snap.copy(
+      publish(snap.copy(
         version = version,
         schemaJson = newSchema.json,
         files = untouched ++ newFiles,
@@ -603,7 +590,7 @@ class UpsertTable(spark: SparkSession, val location: String) {
     require(newNumBuckets > 0, "bucket count must be positive")
     val snap = snapshotOrFail
     if (snap.numBuckets == newNumBuckets) return
-    SnapshotLog.commit(location, snap.copy(
+    publish(snap.copy(
       version = snap.version + 1,
       numBuckets = newNumBuckets,
       files = snap.files.map(f => f.copy(spec = fileSpec(snap, f))),
@@ -619,7 +606,8 @@ class UpsertTable(spark: SparkSession, val location: String) {
     * never disturbed.
     */
   def rewriteData(): Unit = synchronized {
-    rewriteAll(snapshotOrFail, snapshotOrFail.numBuckets)
+    val snap = snapshotOrFail
+    rewriteAll(snap, snap.numBuckets)
   }
 
   /** Targeted compaction: collapse ONLY the buckets holding more than
@@ -678,7 +666,7 @@ class UpsertTable(spark: SparkSession, val location: String) {
     }
     val selected = toRewrite.toSet
     val untouched = snap.files.filterNot(selected)
-    val sch = schema
+    val sch = snap.schema
     val version = snap.version + 1
     val outDir = s"$location/data/v$version-$attemptId"
     // current-state view of just those groups (delta overlay applied,
@@ -691,9 +679,9 @@ class UpsertTable(spark: SparkSession, val location: String) {
       // unstable re-sort is inserted and key clustering survives
       .sortWithinPartitions(col("__bucket") +: snap.keyCols.map(col): _*)
       .write.partitionBy("__bucket").mode("overwrite").parquet(outDir)
-    SnapshotLog.commit(location, snap.copy(
+    publish(snap.copy(
       version = version,
-      files = untouched ++ newFileEntries(outDir, sch),
+      files = untouched ++ newFileEntries(outDir, sch, snap.lookupCols),
       timestampMs = System.currentTimeMillis(),
       operation = "compact"))
     over.size
@@ -717,10 +705,10 @@ class UpsertTable(spark: SparkSession, val location: String) {
       require(zCols.nonEmpty, "cluster needs at least one column")
       require(maxRowsPerFile > 0, "maxRowsPerFile must be positive")
       val snap = snapshotOrFail
-      val sch = schema
+      val sch = snap.schema
       zCols.foreach(c => require(sch.fieldNames.contains(c),
         s"no such column to cluster by: $c"))
-      val df = read()
+      val df = readSnapshot(snap)
       val statAggs = zCols.flatMap(c => Seq(
         min(col(c).cast("double")).as(s"__mn_$c"),
         max(col(c).cast("double")).as(s"__mx_$c")))
@@ -744,15 +732,15 @@ class UpsertTable(spark: SparkSession, val location: String) {
         .write.partitionBy("__bucket")
         .option("maxRecordsPerFile", maxRowsPerFile)
         .mode("overwrite").parquet(outDir)
-      SnapshotLog.commit(location, snap.copy(
+      publish(snap.copy(
         version = version,
-        files = newFileEntries(outDir, sch),
+        files = newFileEntries(outDir, sch, snap.lookupCols),
         timestampMs = System.currentTimeMillis(),
         operation = "cluster"))
     }
 
   private def rewriteAll(snap: Snapshot, numBuckets: Int): Unit =
-    commitRewrite(snap, numBuckets, schema, read())
+    commitRewrite(snap, numBuckets, snap.schema, readSnapshot(snap))
 
   private def commitRewrite(snap: Snapshot, numBuckets: Int,
       schema: StructType, df: DataFrame,
@@ -765,8 +753,8 @@ class UpsertTable(spark: SparkSession, val location: String) {
       // __bucket first: see compact — keeps the writer from re-sorting
       .sortWithinPartitions(col("__bucket") +: snap.keyCols.map(col): _*)
       .write.partitionBy("__bucket").mode("overwrite").parquet(outDir)
-    val newFiles = newFileEntries(outDir, schema)
-    SnapshotLog.commit(location, snap.copy(
+    val newFiles = newFileEntries(outDir, schema, snap.lookupCols)
+    publish(snap.copy(
       version = version,
       schemaJson = schema.json,
       numBuckets = numBuckets,
@@ -786,7 +774,7 @@ class UpsertTable(spark: SparkSession, val location: String) {
     */
   def evolveSchema(incoming: StructType): Unit = synchronized {
     val snap = snapshotOrFail
-    val old = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
+    val old = snap.schema
     val (newSchema, _) = evolve(old, incoming)
     if (newSchema == old) return
     val unservable = old.fields.exists { f =>
@@ -797,7 +785,7 @@ class UpsertTable(spark: SparkSession, val location: String) {
       commitRewrite(snap, snap.numBuckets, newSchema,
         align(readFiles(snap.files, old), newSchema), operation = "evolve")
     else
-      SnapshotLog.commit(location, snap.copy(
+      publish(snap.copy(
         version = snap.version + 1,
         schemaJson = newSchema.json,
         timestampMs = System.currentTimeMillis(),
@@ -853,7 +841,7 @@ class UpsertTable(spark: SparkSession, val location: String) {
     */
   def overwrite(batch: DataFrame): Unit = synchronized {
     val snap = snapshotOrFail
-    val oldSchema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
+    val oldSchema = snap.schema
     val (newSchema, _) = evolve(oldSchema, batch.schema)
     val aligned = align(batch, newSchema)
     val dups = aligned.groupBy(snap.keyCols.map(col): _*)
@@ -867,8 +855,8 @@ class UpsertTable(spark: SparkSession, val location: String) {
       .repartition(snap.numBuckets, col("__bucket"))
       .sortWithinPartitions(col("__bucket") +: snap.keyCols.map(col): _*)
       .write.partitionBy("__bucket").mode("overwrite").parquet(outDir)
-    val newFiles = newFileEntries(outDir, newSchema)
-    SnapshotLog.commit(location, snap.copy(
+    val newFiles = newFileEntries(outDir, newSchema, snap.lookupCols)
+    publish(snap.copy(
       version = version,
       schemaJson = newSchema.json,
       files = newFiles,
@@ -898,7 +886,7 @@ class UpsertTable(spark: SparkSession, val location: String) {
     require(missing.isEmpty,
       s"cannot roll back to v$toVersion: ${missing.size} data file(s) " +
         s"already expired, e.g. ${missing.headOption.map(_.path).getOrElse("")}")
-    SnapshotLog.commit(location, target.copy(
+    publish(target.copy(
       version = cur.version + 1,
       committed = cur.committed,
       timestampMs = System.currentTimeMillis(),
@@ -1046,6 +1034,14 @@ class UpsertTable(spark: SparkSession, val location: String) {
     }
   }
 
+  private def confLookupCols: Seq[String] = spark.conf.getOption(LookupBloomsConf)
+    .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
+
+  private def publish(s: Snapshot): Snapshot = {
+    SnapshotLog.commit(location, s)
+    s
+  }
+
   private def attemptId: String =
     java.util.UUID.randomUUID().toString.take(8)
 
@@ -1067,9 +1063,10 @@ class UpsertTable(spark: SparkSession, val location: String) {
     * as the footer reads; Iceberg pays it in the same place for its
     * puffin blobs).
     */
-  private def newFileEntries(outDir: String, schema: StructType): Seq[FileEntry] = {
+  private def newFileEntries(outDir: String, schema: StructType,
+      declared: Seq[String]): Seq[FileEntry] = {
     val conf = spark.sessionState.newHadoopConf()
-    val lookups = effectiveLookupCols(schema)
+    val lookups = effectiveLookupCols(schema, declared)
     val files = listBucketFiles(outDir)
     val blooms = collectBlooms(outDir, files.map(_._1), lookups)
     files.map { case (rel, b) =>
@@ -1084,12 +1081,9 @@ class UpsertTable(spark: SparkSession, val location: String) {
     * additions (so an existing table can start collecting without a
     * schema change).
     */
-  private def effectiveLookupCols(schema: StructType): Seq[String] = {
-    val declared = currentSnapshot.map(_.lookupCols).getOrElse(Nil) ++
-      spark.conf.getOption(LookupBloomsConf)
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-        .getOrElse(Nil)
-    declared.distinct.filter(c => schema.fields.exists(f =>
+  private def effectiveLookupCols(schema: StructType,
+      declared: Seq[String]): Seq[String] = {
+    (declared ++ confLookupCols).distinct.filter(c => schema.fields.exists(f =>
       f.name == c && (f.dataType == LongType || f.dataType == IntegerType ||
         f.dataType == StringType)))
   }

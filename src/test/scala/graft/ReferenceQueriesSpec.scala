@@ -1,19 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-
-object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-}
 
 class ReferenceQueriesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -29,10 +16,11 @@ class ReferenceQueriesSpec extends AnyFunSuite {
   test("every query has an oracle and runs non-empty on sf0.001") {
     val qs = SparkEntry.queries
     assert(qs.nonEmpty)
-    qs.foreach { case (name, fn) =>
-      val df = fn(spark, sf)
-      if (emptyAtSmallestSf(name)) df.count() // must run, may be empty
-      else assert(df.count() > 0, s"$name returned 0 rows")
+    qs.keys.foreach { name =>
+      val rows = TestSpark.inventoryRun(sf, name).rows
+      // emptyAtSmallestSf queries must run (inventoryRun rethrows a
+      // failure) but may be empty
+      if (!emptyAtSmallestSf(name)) assert(rows > 0, s"$name returned 0 rows")
     }
     // every oracle key must have a query (the converse may be relaxed
     // for non-SQL-expressible ops)

@@ -367,4 +367,53 @@ class GraftCatalogSpec extends AnyFunSuite {
     }
     assert(err.getMessage.contains("keys"))
   }
+
+  test("a query reads the snapshot resolved at load, not a commit landing before it runs") {
+    warehouse
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_t.pin")
+    // (table, AS OF clause?, commit kind): each query is analyzed on a
+    // delta-free 10-row table, then 5 new keys commit, then it runs
+    Seq(("delta", false, true), ("rewrite", false, false),
+        ("asof", true, true)).foreach { case (name, asOf, delta) =>
+      spark.sql(s"CREATE TABLE graft_t.pin.$name (k INT, v STRING) " +
+        "TBLPROPERTIES('keys'='k')")
+      val t = UpsertTable(spark, s"$warehouse/pin/$name")
+      t.merge((1 to 10).map(i => (i, "a")).toDF("k", "v"))
+      val clause =
+        if (asOf) s" VERSION AS OF ${t.currentSnapshot.get.version}" else ""
+      val q = spark.sql(s"SELECT count(*) FROM graft_t.pin.$name$clause")
+      t.merge((11 to 15).map(i => (i, "b")).toDF("k", "v"), delta = delta)
+      assert(q.collect().head.getLong(0) === 10L,
+        s"$name: the query saw a commit made after its table was loaded")
+      assert(spark.sql(s"SELECT count(*) FROM graft_t.pin.$name")
+        .collect().head.getLong(0) === 15L, s"$name: the commit is not visible")
+    }
+  }
+
+  test("namespace and table identifiers cannot leave the warehouse") {
+    val base = Files.createTempDirectory("graft-escape")
+    val wh = Files.createDirectories(base.resolve("a").resolve("wh"))
+    spark.conf.set("spark.sql.catalog.graft_esc", classOf[GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graft_esc.warehouse", wh.toString)
+    // `..` names the warehouse's parent; the absolute segment a sibling
+    val abs = Files.createDirectories(base.resolve("abs"))
+    val keep = Seq(abs.resolve("keep"), base.resolve("a").resolve("keep"))
+    keep.foreach(Files.writeString(_, "x"))
+    def messages(e: Throwable): String =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+        .mkString(" / ")
+    Seq(s"`$abs`", "`..`").foreach { seg =>
+      Seq(s"SELECT * FROM graft_esc.$seg.t",
+          s"SELECT * FROM graft_esc.ns.$seg",
+          s"SHOW TABLES IN graft_esc.$seg",
+          s"CREATE TABLE graft_esc.$seg.t (k INT) TBLPROPERTIES('keys'='k')",
+          s"DROP NAMESPACE graft_esc.$seg CASCADE").foreach { sql =>
+        val e = intercept[Exception](spark.sql(sql).collect())
+        assert(messages(e).contains("outside the safe name set"),
+          s"$sql: ${messages(e)}")
+      }
+    }
+    keep.foreach(p => assert(Files.exists(p), s"$p was deleted"))
+    assert(!Files.exists(abs.resolve("t")), "CREATE TABLE wrote outside")
+  }
 }
