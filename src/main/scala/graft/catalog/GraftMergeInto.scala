@@ -213,13 +213,15 @@ case class GraftMergeCommand(location: String, batch: LogicalPlan,
       // from the batch become delete rows in the same changelog —
       // one key-projected target scan + left-anti join, then the
       // ordinary keyed merge applies upserts and prunes in one commit
-      val keys = store.keyCols
+      val snap = store.currentSnapshot.getOrElse(
+        throw new IllegalStateException(s"table does not exist: $location"))
+      val keys = snap.keyCols
       val op = opCol.getOrElse("__merge_op")
       val upserts =
         if (opCol.isDefined) df else df.withColumn(op, lit("u"))
-      val victims = store.read().select(keys.map(col): _*)
+      val victims = store.readSnapshot(snap).select(keys.map(col): _*)
         .join(df.select(keys.map(col): _*), keys, "left_anti")
-      val fields = store.schema.fields.toSeq
+      val fields = snap.schema.fields.toSeq
       val dels = victims.select(fields.map { f =>
         if (keys.contains(f.name)) col(f.name)
         else lit(null).cast(f.dataType).as(f.name)

@@ -10,8 +10,9 @@ import com.fasterxml.jackson.module.scala.DefaultScalaModule
   * committed micro-batch, mapping every table the sink has ever
   * touched to the version that table reached when the batch completed.
   *
-  * [[CdcSink.applyBatch]] commits tables sequentially (each merge
-  * atomic and replay-guarded per table); a crash mid-batch therefore
+  * [[CdcSink.applyBatch]] commits a batch's tables concurrently (each
+  * merge atomic and replay-guarded per table, none ordered against
+  * another); a crash, or one table's failure, mid-batch therefore
   * leaves sibling tables at DIFFERENT batchIds until restart replays —
   * transient and self-healing, but a reader joining across tables in
   * that window would observe a torn batch. The cursor closes the
@@ -23,11 +24,12 @@ import com.fasterxml.jackson.module.scala.DefaultScalaModule
   * any versioned read).
   *
   * Crash analysis, replay-driven like the q180 packed cursor:
-  *  - crash BEFORE any/all table commits → cursor still names the
-  *    previous batch; restart replays the batch (committed tables
-  *    no-op on the batchId guard, the rest catch up), then the cursor
-  *    advances with the post-replay versions — which ARE the batch's
-  *    versions, since no-op replays do not re-commit;
+  *  - crash or failure before EVERY table has committed → cursor
+  *    still names the previous batch; restart replays the batch
+  *    (committed tables no-op on the batchId guard, the rest catch
+  *    up), then the cursor advances with the post-replay versions —
+  *    which ARE the batch's versions, since no-op replays do not
+  *    re-commit;
   *  - crash AFTER the cursor write → the whole replay is a no-op and
   *    the cursor write is atomic-exclusive (hard-link publish, the
   *    [[graft.store.Snapshot.commit]] idiom), so the existing record

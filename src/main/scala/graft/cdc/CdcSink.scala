@@ -1,6 +1,11 @@
 package graft.cdc
 
+import java.util.concurrent.{ExecutionException, Executors}
+
+import scala.util.{Failure, Try}
+
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -80,21 +85,27 @@ object CdcSink {
     * logical columns, and CDC-merge. Disable re-inference entirely via
     * [[EvolveConf]] to lock schemas.
     *
-    * Scale notes: the only driver-side materialization is the distinct
-    * table list (bounded by the schema's table count, like the
-    * connector's own per-table writers); each table's merge is a
-    * bucketed rewrite touching only affected buckets.
+    * Scale notes: the only driver-side materialization is the routing
+    * aggregate — one row per table, its name and latest wire schema
+    * (bounded by the schema's table count, like the connector's own
+    * per-table writers); each table's merge is a bucketed rewrite
+    * touching only affected buckets.
     *
-    * Commit atomicity is PER TABLE, tables committing sequentially
-    * within a batch (the reference's sink coordinates tables through a
-    * control-topic 2PC instead). A crash mid-batch can leave table A
+    * Commit atomicity is PER TABLE. After the routing collect the
+    * batch's tables commit CONCURRENTLY — each table's schema
+    * resolution and merge is its own task, side by side like the
+    * reference's per-table writers (its sink then coordinates tables
+    * through a control-topic 2PC instead). The batch waits for every
+    * table, then rethrows the first failure (in table-name order) as
+    * thrown. A crash or failure mid-batch can therefore leave table A
     * at batch n while table B is still at n-1; on restart the batch
     * replays, A's batchId guard makes its merge a no-op, and B catches
     * up — the divergence window is transient and self-healing, never
     * double-applied. Readers who must not observe that window use
     * [[readConsistent]]: a [[BatchCursor]] naming every table's
-    * version is published only AFTER the batch's last table commits,
-    * so the cursor always points at a mutually consistent point.
+    * version is published only AFTER every table of the batch has
+    * committed, so the cursor always points at a mutually consistent
+    * point.
     *
     * @param microTsCols per-table columns carried as
     *   io.debezium.time.MicroTimestamp (epoch micros int64) to convert
@@ -139,10 +150,17 @@ object CdcSink {
         && col("__payload").isNotNull)
       .cache()
     try {
-      // per-record dynamic routing; table count is bounded (the
-      // connector's topics.regex match list), so collecting it is safe
-      val tables = meta.select("__table").distinct().collect().map(_.getString(0))
-      val versions = tables.sorted.map { table =>
+      // per-record dynamic routing in ONE aggregate: each table with the
+      // latest embedded connect schema its framed records carry (by the
+      // batch's own lsn/txId order; None for an all-bare table). Table
+      // count is bounded (the connector's topics.regex match list), so
+      // collecting it is safe
+      val routed = meta.groupBy("__table")
+        .agg(max_by(col("__schema"), when(col("__schema").isNotNull,
+          struct(col("__lsn"), col("__txid")))))
+        .collect().map(r => r.getString(0) -> Option(r.getString(1)))
+        .sortBy(_._1).toSeq
+      val versions = inParallel(spark, routed) { case (table, framed) =>
         val rows = meta.where(col("__table") === table)
         val target = UpsertTable(spark, targetPath(warehouseDir, table))
         val evolve =
@@ -162,16 +180,12 @@ object CdcSink {
           spark.read.option("dropFieldIfAllNull", "true")
             .json(rows.select("__payload").as(Encoders.STRING)).schema
         }
-        // FRAMED batch: the latest embedded connect schema (by the
-        // batch's own lsn/txId order) is the authoritative typed
-        // contract — no sampling inference, no key scan, no drift
-        // guard: a schema change arrives WITH its records, which is
-        // exactly the guarantee the bare path has to reconstruct by
-        // sampling. Bounded driver read: ONE schema string.
-        val wireSchema = rows.where(col("__schema").isNotNull)
-          .orderBy(col("__lsn").desc_nulls_last, col("__txid").desc_nulls_last)
-          .select("__schema").as(Encoders.STRING)
-          .take(1).headOption.flatMap(ConnectSchema.rowSchema)
+        // FRAMED batch: the latest embedded connect schema (routed
+        // above) is the authoritative typed contract — no sampling
+        // inference, no key scan, no drift guard: a schema change
+        // arrives WITH its records, which is exactly the guarantee the
+        // bare path has to reconstruct by sampling
+        val wireSchema = framed.flatMap(ConnectSchema.rowSchema)
         val cachedSchema = target.currentSnapshot.map(s =>
           payloadSchemaFor(s.schema, microTsCols.getOrElse(table, Seq.empty)))
         def bareSchema = cachedSchema match {
@@ -258,12 +272,47 @@ object CdcSink {
           batchId = batchId,
           autoCreateKeys = keyColsFor(table)).version
       }.toMap
-      // every table of the batch has committed (merges above are
-      // sequential and replay-guarded) — publish the cross-table
-      // consistency point from the versions they returned. See
-      // [[BatchCursor]] for the crash analysis.
+      // every table of the batch has committed (each merge atomic and
+      // replay-guarded; inParallel returned, so none failed) — publish
+      // the cross-table consistency point from the versions they
+      // returned. See [[BatchCursor]] for the crash analysis.
       batchId.foreach(BatchCursor.commit(warehouseDir, _, versions))
     } finally meta.unpersist()
+  }
+
+  /** `f` over every item, concurrently: one task per item on a pool of
+    * min(items, defaultParallelism) threads, discarded with the call.
+    * Each task starts through `SQLExecution.withThreadLocalCaptured`,
+    * so the caller's active session and local properties (scheduler
+    * pool, job group, tags a listener attributes jobs by) reach every
+    * Spark job it launches. Waits for EVERY task, then returns the
+    * results in item order or rethrows the first failure in item order
+    * as thrown — not wrapped — with any later ones attached as
+    * suppressed.
+    */
+  private def inParallel[A, B](spark: SparkSession, items: Seq[A])(
+      f: A => B): Seq[B] = {
+    val width = math.max(1,
+      math.min(items.size, spark.sparkContext.defaultParallelism))
+    val pool = Executors.newFixedThreadPool(width, (r: Runnable) => {
+      val t = new Thread(r, "cdc-sink-table")
+      t.setDaemon(true)
+      t
+    })
+    try {
+      val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      val outcomes = items
+        .map(a => SQLExecution.withThreadLocalCaptured(session, pool)(f(a)))
+        .map(task => Try(task.get()).recoverWith {
+          case e: ExecutionException => Failure(e.getCause)
+        })
+      outcomes.collect { case Failure(e) => e } match {
+        case first +: rest =>
+          rest.foreach(first.addSuppressed)
+          throw first
+        case _ => outcomes.map(_.get)
+      }
+    } finally pool.shutdownNow()
   }
 
   /** The last CONSISTENT cross-table point the sink published — the

@@ -22,7 +22,8 @@ import org.apache.spark.sql.types._
   * each Debezium logical type to its store-side conversion.
   *
   * Scale note: parsing happens once per (table, batch) on the driver —
-  * one bounded `take(1)` of a schema string — never per record.
+  * the one schema string per table the sink's routing aggregate
+  * returns — never per record.
   */
 object ConnectSchema {
 

@@ -840,8 +840,9 @@ object StoreQueries {
     }),
 
     // q381 — CROSS-TABLE CONSISTENT CDC READ through a kill-between-
-    // tables replay: the sink commits tables sequentially, so a crash
-    // mid-batch leaves siblings at different batchIds until restart —
+    // tables replay: the sink commits a batch's tables concurrently,
+    // each atomically on its own, so a crash mid-batch can leave
+    // siblings at different batchIds until restart —
     // readers joining across tables in that window would see a TORN
     // batch. The [[graft.cdc.BatchCursor]] closes it: published only
     // after a batch's LAST table commits, carried forward per table,

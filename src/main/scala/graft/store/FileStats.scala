@@ -43,28 +43,28 @@ object FileStats {
     case _ => false
   }
 
-  /** Read one just-written file's footer and aggregate row-group
-    * statistics per supported top-level column. Runs driver-side at
-    * commit time over only the files the commit produced (bounded by
-    * affected buckets), exactly where Iceberg collects its manifest
-    * metrics. Any anomaly → empty map (stats are an optimization,
-    * never a correctness dependency).
+  /** Read one just-written file's footer: its row count, and
+    * row-group statistics aggregated per supported top-level column.
+    * Runs driver-side at commit time over only the files the commit
+    * produced (bounded by affected buckets), exactly where Iceberg
+    * collects its manifest metrics. Any anomaly → None (stats are an
+    * optimization, never a correctness dependency).
     */
   def collect(conf: Configuration, absPath: String,
-      schema: StructType): Map[String, ColStats] = {
+      schema: StructType): Option[(Long, Map[String, ColStats])] = {
     val byName = schema.fields.filter(f => supported(f.dataType))
       .map(f => f.name -> f.dataType).toMap
-    if (byName.isEmpty) return Map.empty
     try {
       val in = HadoopInputFile.fromPath(new HadoopPath(absPath), conf)
       val reader = ParquetFileReader.open(in)
       try {
-        val chunks = reader.getFooter.getBlocks.asScala
+        val blocks = reader.getFooter.getBlocks.asScala
+        val chunks = blocks
           .flatMap(_.getColumns.asScala)
           .filter(c => c.getPath.toArray.length == 1 &&
             byName.contains(c.getPath.toDotString))
           .groupBy(_.getPath.toDotString)
-        chunks.flatMap { case (name, cols) =>
+        val stats = chunks.flatMap { case (name, cols) =>
           val dt = byName(name)
           // every row group must carry trustworthy stats, else omit
           val ok = cols.forall { c =>
@@ -91,8 +91,9 @@ object FileStats {
             }
           }
         }.toMap
+        Some((blocks.map(_.getRowCount).sum, stats))
       } finally reader.close()
-    } catch { case scala.util.control.NonFatal(_) => Map.empty }
+    } catch { case scala.util.control.NonFatal(_) => None }
   }
 
   private def render(v: AnyRef): String = v match {

@@ -276,8 +276,12 @@ class UpsertTable(spark: SparkSession, val location: String) {
     * pruned base file can only hide row versions that either don't
     * match the lookup or are superseded by a delta that IS read.
     */
-  def lookupFiles(column: String, values: Seq[Any]): Seq[FileEntry] = {
-    val snap = snapshotOrFail
+  def lookupFiles(column: String, values: Seq[Any]): Seq[FileEntry] =
+    lookupFilesIn(snapshotOrFail, column, values)
+
+  /** [[lookupFiles]] over the resolved snapshot `snap`. */
+  private def lookupFilesIn(snap: Snapshot, column: String,
+      values: Seq[Any]): Seq[FileEntry] =
     snap.files.filter { f =>
       FileEntry.isDelta(f) || (f.blooms.get(column) match {
         case None => true
@@ -293,7 +297,6 @@ class UpsertTable(spark: SparkSession, val location: String) {
           }
       })
     }
-  }
 
   /** Reverse lookup by a declared secondary column (the GDPR
     * user→rows path): the merged current-state view restricted to
@@ -305,7 +308,7 @@ class UpsertTable(spark: SparkSession, val location: String) {
     */
   def readLookup(column: String, values: Seq[Any]): DataFrame = {
     val snap = snapshotOrFail
-    mergedView(lookupFiles(column, values), snap.schema, snap.keyCols)
+    mergedView(lookupFilesIn(snap, column, values), snap.schema, snap.keyCols)
       .where(col(column).isin(values: _*))
   }
 
@@ -490,6 +493,13 @@ class UpsertTable(spark: SparkSession, val location: String) {
           .distinct().collect().map(_.getInt(0)).toSet)
       }.toMap
       val affected: Set[Int] = touchedBySpec(snap.numBuckets)
+      // write stage sizing, both commit kinds below: min(touched
+      // buckets, cores) tasks, hash-routed on __bucket. A bucket lives
+      // in exactly one task and each task writes one file per bucket it
+      // holds, so the layout is one file per touched bucket at any core
+      // count — a 16-bucket commit on 4 cores runs 4 write tasks, not 16
+      val writeTasks = math.max(1,
+        math.min(affected.size, spark.sparkContext.defaultParallelism))
 
       val version = snap.version + 1
       // unique per-attempt dir: a racing/crashed writer can never
@@ -505,7 +515,7 @@ class UpsertTable(spark: SparkSession, val location: String) {
         // is O(batch) regardless of how many buckets the keys span
         normalized.withColumn(SeqCol, lit(version))
           .withColumn("__bucket", bucketOf)
-          .repartition(math.max(affected.size, 1), col("__bucket"))
+          .repartition(writeTasks, col("__bucket"))
           .sortWithinPartitions(col("__bucket") +: snap.keyCols.map(col): _*)
           .write.partitionBy("__bucket").mode("overwrite").parquet(outDir)
         val newFiles = newFileEntries(outDir, newSchema, snap.lookupCols)
@@ -541,7 +551,7 @@ class UpsertTable(spark: SparkSession, val location: String) {
       // stats prune key-range scans inside a bucket too; __bucket leads
       // so the writer's partition ordering is satisfied and it never
       // inserts its own (unstable) re-sort
-      out.repartition(math.max(affected.size, 1), col("__bucket"))
+      out.repartition(writeTasks, col("__bucket"))
         .sortWithinPartitions(col("__bucket") +: snap.keyCols.map(col): _*)
         .write.partitionBy("__bucket").mode("overwrite").parquet(outDir)
 
@@ -1068,10 +1078,20 @@ class UpsertTable(spark: SparkSession, val location: String) {
     val conf = spark.sessionState.newHadoopConf()
     val lookups = effectiveLookupCols(schema, declared)
     val files = listBucketFiles(outDir)
-    val blooms = collectBlooms(outDir, files.map(_._1), lookups)
+    val footers = files.map { case (rel, _) =>
+      rel -> FileStats.collect(conf, s"$outDir/$rel", schema)
+    }.toMap
+    // each bloom is sized by its file's non-null count, read off the
+    // footer: rows minus the column's null count (all rows when the
+    // footer records no null count for it)
+    val nonNull = for {
+      (rel, Some((rows, stats))) <- footers.toSeq
+      c <- lookups
+    } yield (rel, c) -> (rows - stats.get(c).map(_.nullCount).getOrElse(0L))
+    val blooms = collectBlooms(outDir, nonNull.toMap, schema)
     files.map { case (rel, b) =>
       FileEntry(outDir.stripPrefix(s"$location/") + s"/$rel", b,
-        FileStats.collect(conf, s"$outDir/$rel", schema),
+        footers(rel).map(_._2).getOrElse(Map.empty),
         blooms = blooms.getOrElse(rel, Map.empty))
     }
   }
@@ -1089,64 +1109,60 @@ class UpsertTable(spark: SparkSession, val location: String) {
   }
 
   /** Base64 spark-sketch blooms over each commit file's non-null
-    * values per lookup column, for ALL of a commit's files in TWO
-    * Spark jobs total (a per-(file,col) non-null count, then one
-    * partition-local bloom-build pass merged on the driver) — never
-    * per-file jobs, whose scheduling overhead alone would tax every
-    * commit by O(files × cols) round trips (the r8 bench caught
-    * exactly that as a 3.5× q190 regression). Put/probe semantics are
+    * values per lookup column, for ALL of a commit's files in ONE Spark
+    * job (a partition-local bloom-build pass over the files read under
+    * the table schema, merged on the driver) — never per-file jobs,
+    * whose scheduling overhead alone would tax every commit by
+    * O(files × cols) round trips (the r8 bench caught exactly that as
+    * a 3.5× q190 regression). Each bloom is sized up front from the
+    * footer's non-null count in `nonNull`, so partial blooms of one
+    * (file, col) are equal-sized and merge. Put/probe semantics are
     * `DataFrameStatFunctions.bloomFilter`'s (putLong for integral,
     * putString for strings — what [[lookupFiles]] probes with), so
     * blooms persisted by earlier versions stay compatible. Any
     * anomaly → entries omitted (blooms are an optimization; absence
     * always reads as "cannot prune").
     *
+    * @param nonNull (rel-path, col) → that file's non-null count of col
     * @return rel-path → (col → base64 bloom)
     */
-  private def collectBlooms(outDir: String, rels: Seq[String],
-      cols: Seq[String]): Map[String, Map[String, String]] =
-    if (cols.isEmpty || rels.isEmpty) Map.empty
+  private def collectBlooms(outDir: String, nonNull: Map[(String, String), Long],
+      schema: StructType): Map[String, Map[String, String]] =
+    if (nonNull.isEmpty) Map.empty
     else scala.util.Try {
       import org.apache.spark.util.sketch.BloomFilter
-      val paths = rels.map(r => s"$outDir/$r")
-      val df = spark.read.parquet(paths: _*)
-      val present = cols.filter(df.columns.contains)
-      require(present.nonEmpty, "no lookup columns present")
-      val wide = df.select(
-        (input_file_name().as("__f") +: present.map(col)): _*)
-      // job 1: per-(file,col) non-null counts — sizes each bloom
-      val counts: Map[(String, String), Long] = wide.groupBy("__f")
-        .agg(count(col(present.head)).as(present.head),
-          present.tail.map(c => count(col(c)).as(c)): _*)
-        .collect()
-        .flatMap(r => present.zipWithIndex.map { case (c, i) =>
-          (r.getString(0), c) -> r.getLong(i + 1)
-        }).toMap
+      val rels = nonNull.keys.map(_._1).toSeq.distinct.sorted
+      val cols = nonNull.keys.map(_._2).toSeq.distinct.sorted
       val fpp = LookupBloomFpp
-      val bc = spark.sparkContext.broadcast(
-        counts.map { case (k, n) => k -> math.max(n, 64L) })
-      // job 2: partition-local blooms, merged driver-side (equal-size
-      // blooms per key by construction, so mergeInPlace is legal)
+      val sizes = nonNull.map { case (k, n) => k -> math.max(n, 64L) }
+      val bc = spark.sparkContext.broadcast(sizes)
+      val wide = spark.read.schema(StructType(cols.map(schema(_))))
+        .parquet(rels.map(r => s"$outDir/$r"): _*)
+        .select((input_file_name() +: cols.map(col)): _*)
+      // partition-local blooms, merged driver-side
       val partial = wide.rdd.mapPartitions { it =>
         val m = scala.collection.mutable.HashMap
           .empty[(String, String), BloomFilter]
+        val relOf = scala.collection.mutable.HashMap.empty[String, Option[String]]
         it.foreach { row =>
-          val f = row.getString(0)
-          var i = 0
-          while (i < present.size) {
-            val v = row.get(i + 1)
-            if (v != null) {
-              val bf = m.getOrElseUpdate((f, present(i)),
-                BloomFilter.create(bc.value((f, present(i))), fpp))
-              v match {
-                case l: java.lang.Long => bf.putLong(l)
-                case n: java.lang.Integer => bf.putLong(n.toLong)
-                case s: String => bf.putString(s)
-                case other => bf.put(other)
+          relOf.getOrElseUpdate(row.getString(0), commitRel(row.getString(0), rels))
+            .foreach { r =>
+              var i = 0
+              while (i < cols.size) {
+                val v = row.get(i + 1)
+                if (v != null) {
+                  val bf = m.getOrElseUpdate((r, cols(i)),
+                    BloomFilter.create(bc.value((r, cols(i))), fpp))
+                  v match {
+                    case l: java.lang.Long => bf.putLong(l)
+                    case n: java.lang.Integer => bf.putLong(n.toLong)
+                    case s: String => bf.putString(s)
+                    case other => bf.put(other)
+                  }
+                }
+                i += 1
               }
             }
-            i += 1
-          }
         }
         m.iterator
       }.collect()
@@ -1158,36 +1174,18 @@ class UpsertTable(spark: SparkSession, val location: String) {
           case None => merged(k) = bf
         }
       }
-      // a col with zero non-null values in a file still gets a bloom
-      // (an empty one prunes every probe — the old per-file behavior)
-      counts.keys.foreach { k =>
-        if (!merged.contains(k))
-          merged(k) = BloomFilter.create(64L, fpp)
+      // a col whose footer counts zero non-null values in a file still
+      // gets a bloom (an empty one prunes every probe); any other
+      // missing bloom (a file whose path matched no unique rel) stays
+      // missing, which reads as "cannot prune"
+      nonNull.foreach { case (k, n) =>
+        if (n == 0L && !merged.contains(k))
+          merged(k) = BloomFilter.create(sizes(k), fpp)
       }
-      merged.toSeq.flatMap { case ((f, c), bf) =>
-        // input_file_name is a URI; recover the commit-relative path
-        // by exact segment equality on the DECODED path (URI.getPath
-        // handles any percent-encoding, not just '='), requiring a
-        // UNIQUE match — a wrong match would attach the wrong file's
-        // bloom and make lookup pruning silently unsound (false
-        // negatives), so ambiguity drops the bloom (absence is always
-        // safe: it reads as "cannot prune")
-        val fSegs = scala.util.Try(new java.net.URI(f).getPath)
-          .toOption.filter(_ != null).getOrElse(f)
-          .split('/').filter(_.nonEmpty)
-        val rel = rels.filter { r =>
-          val rSegs = r.split('/').filter(_.nonEmpty)
-          fSegs.length >= rSegs.length &&
-            fSegs.takeRight(rSegs.length).sameElements(rSegs)
-        } match {
-          case Seq(only) => Some(only)
-          case _ => None
-        }
-        rel.map { r =>
-          val bos = new java.io.ByteArrayOutputStream()
-          bf.writeTo(bos)
-          (r, c, java.util.Base64.getEncoder.encodeToString(bos.toByteArray))
-        }
+      merged.toSeq.map { case ((r, c), bf) =>
+        val bos = new java.io.ByteArrayOutputStream()
+        bf.writeTo(bos)
+        (r, c, java.util.Base64.getEncoder.encodeToString(bos.toByteArray))
       }.groupBy(_._1).map { case (r, s) =>
         r -> s.map(t => t._2 -> t._3).toMap
       }
@@ -1334,6 +1332,28 @@ object UpsertTable {
     case (ArrayType(ea, _), ArrayType(eb, _)) =>
       widerOf(ea, eb).map(ArrayType(_, containsNull = true))
     case _ => None
+  }
+
+  /** The commit-relative path among `rels` that the file URI `f`
+    * (as `input_file_name` reports it) names: exact segment equality
+    * on the DECODED path (URI.getPath handles any percent-encoding, not
+    * just '='), requiring a UNIQUE match — a wrong match would attach
+    * the wrong file's bloom and make lookup pruning silently unsound
+    * (false negatives), so ambiguity yields None (absence is always
+    * safe: it reads as "cannot prune").
+    */
+  private def commitRel(f: String, rels: Seq[String]): Option[String] = {
+    val fSegs = scala.util.Try(new java.net.URI(f).getPath)
+      .toOption.filter(_ != null).getOrElse(f)
+      .split('/').filter(_.nonEmpty)
+    rels.filter { r =>
+      val rSegs = r.split('/').filter(_.nonEmpty)
+      fSegs.length >= rSegs.length &&
+        fSegs.takeRight(rSegs.length).sameElements(rSegs)
+    } match {
+      case Seq(only) => Some(only)
+      case _ => None
+    }
   }
 
   def apply(spark: SparkSession, location: String): UpsertTable =

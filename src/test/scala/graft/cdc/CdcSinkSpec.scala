@@ -442,6 +442,42 @@ class CdcSinkSpec extends AnyFunSuite {
       .map(_.getInt(0)).toSet === Set(7, 8))
   }
 
+  test("two framed schema versions out of arrival order: the highest " +
+      "(lsn, txId) schema wins") {
+    import spark.implicits._
+    import com.fasterxml.jackson.databind.ObjectMapper
+    import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+    val captured = CapturedWire.lines("cdc.commerce.account").head
+    // the next schema version: the row images gain an optional `tier`
+    val m = new ObjectMapper
+    val grown = m.readTree(captured).asInstanceOf[ObjectNode]
+    grown.get("schema").get("fields").forEach { f =>
+      if (Set("before", "after")(f.get("field").asText()))
+        f.get("fields").asInstanceOf[ArrayNode].add(m.readTree(
+          """{"type":"string","optional":true,"field":"tier"}"""))
+    }
+    def row(id: Int, tier: String) =
+      s"""{"user_id":$id,"email":"u$id@example.com",""" +
+        s""""created_at":1757389556032031$tier}"""
+    // (lsn, txId) of the newer record beats the older one's, which
+    // arrives after it; tried once on lsn and once on txId at equal lsn
+    Seq((22447000L, 800L, 22446990L, 900L),
+        (22447000L, 801L, 22447000L, 800L)).zipWithIndex.foreach {
+      case ((newLsn, newTx, oldLsn, oldTx), i) =>
+        val wh = Files.createTempDirectory(s"graft-cdc-versions-$i").toString
+        val newer = CapturedWire.continuation(m.writeValueAsString(grown),
+          "c", "null", row(7, ""","tier":"gold""""), lsn = newLsn, txId = newTx)
+        val older = CapturedWire.continuation(captured, "c", "null",
+          row(8, ""), lsn = oldLsn, txId = oldTx)
+        CdcSink.applyBatch(spark, Seq(newer, older).toDF("value"), wh, keyFor)
+        val t = UpsertTable(spark, CdcSink.targetPath(wh, "account"))
+        assert(t.schema.fieldNames.contains("tier"))
+        assert(t.read().select("user_id", "tier").collect()
+          .map(r => r.getInt(0) -> Option(r.getString(1))).toMap ===
+          Map(7 -> Some("gold"), 8 -> None))
+    }
+  }
+
   test("typed envelope parse via Envelope.schema round-trips op and images") {
     import spark.implicits._
     import org.apache.spark.sql.functions._

@@ -75,4 +75,66 @@ class LookupBloomSpec extends AnyFunSuite {
       assert(t.read().count() === 512L - 3L) // 4 rows minus re-keyed 12
     } finally spark.conf.unset(UpsertTable.LookupBloomsConf)
   }
+
+  test("each file's bloom is sized from its footer: non-null count, at least 64") {
+    import org.apache.spark.util.sketch.BloomFilter
+    val dir = Files.createTempDirectory("graft-bloom-size").toString
+    spark.conf.set(UpsertTable.LookupBloomsConf, "user_id,email")
+    try {
+      val t = UpsertTable(spark, dir)
+      // ~190 rows per bucket file, a fifth of user_id and a seventh of
+      // email null; then a 3-row delta (one-row files: the 64 floor)
+      // whose email is null throughout (an empty bloom)
+      val rows = (0 until 3000).map { i =>
+        (i.toLong,
+          if (i % 5 == 0) None else Some((i / 3).toLong),
+          if (i % 7 == 0) None else Some(s"u${i / 3}@example.com"))
+      }
+      t.merge(rows.toDF("id", "user_id", "email"), autoCreateKeys = Seq("id"))
+      t.merge(Seq((1L, Some(9000L), Option.empty[String]),
+          (2L, Some(9001L), None), (4L, None, None))
+        .toDF("id", "user_id", "email"), delta = true)
+      val snap = t.currentSnapshot.get
+      assert(snap.files.exists(f => FileEntry.isDelta(f)) &&
+        snap.files.exists(f => !FileEntry.isDelta(f)))
+
+      // the bloom each file's values give when sized by its own
+      // non-null count, built here from the file itself
+      def expected(path: String, c: String): BloomFilter = {
+        val vals = spark.read.parquet(s"$dir/$path").select(c)
+          .collect().map(_.get(0)).filter(_ != null)
+        val bf = BloomFilter.create(math.max(vals.length, 64).toLong, 0.01)
+        vals.foreach {
+          case l: java.lang.Long => bf.putLong(l)
+          case s: String => bf.putString(s)
+        }
+        bf
+      }
+      def stored(f: FileEntry, c: String): BloomFilter =
+        BloomFilter.readFrom(new java.io.ByteArrayInputStream(
+          java.util.Base64.getDecoder.decode(f.blooms(c))))
+      val built = snap.files.map(f =>
+        f.path -> Seq("user_id", "email").map(c => c -> expected(f.path, c)).toMap
+      ).toMap
+      snap.files.foreach { f =>
+        Seq("user_id", "email").foreach { c =>
+          assert(stored(f, c) == built(f.path)(c), s"${f.path} / $c")
+        }
+      }
+
+      // lookups admit exactly the files those blooms admit (deltas
+      // always), present and absent values alike
+      Seq[Any](3L, 500L, 9000L, 123456L).foreach { v =>
+        assert(t.lookupFiles("user_id", Seq(v)).map(_.path).toSet ===
+          snap.files.filter(f => FileEntry.isDelta(f) ||
+            built(f.path)("user_id").mightContainLong(v.asInstanceOf[Long]))
+            .map(_.path).toSet)
+      }
+      Seq("u3@example.com", "nobody@example.com").foreach { v =>
+        assert(t.lookupFiles("email", Seq(v)).map(_.path).toSet ===
+          snap.files.filter(f => FileEntry.isDelta(f) ||
+            built(f.path)("email").mightContainString(v)).map(_.path).toSet)
+      }
+    } finally spark.conf.unset(UpsertTable.LookupBloomsConf)
+  }
 }
