@@ -5,20 +5,18 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{Path => HadoopPath}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, WriteBuilder}
-import org.apache.spark.sql.execution.datasources.{FileStatusCache, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
 import org.apache.spark.sql.sources.{EqualTo, Filter, InsertableRelation}
 import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.store.{Snapshot, SnapshotLog, UpsertTable}
+import graft.store.{Snapshot, SnapshotLog, StoreFileIndex, UpsertTable}
 
 /** SQL addressability for the upsert store (SURVEY.md §2.1 S7, §2.4
   * Q-d/Q-f): a `TableCatalog` + `SupportsNamespaces` over a warehouse
@@ -264,7 +262,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
   * catalog loaded the table (current, `VERSION AS OF` or `TIMESTAMP AS
   * OF`). Schema, key pruning, the scan's files and [[GraftDeltaReadRule]]'s
   * overlay all derive from it, so a commit landing after analysis is
-  * never seen. Writes re-resolve inside [[UpsertTable.merge]].
+  * never seen. Both read its files through a
+  * [[graft.store.StoreFileIndex]] built from the manifest's file list:
+  * no directory is listed and planning launches no Spark job. Writes
+  * re-resolve inside [[UpsertTable.merge]].
   */
 private[catalog] class GraftSqlTable(ident: Identifier,
     private[catalog] val store: UpsertTable,
@@ -321,13 +322,11 @@ private[catalog] class GraftSqlTable(ident: Identifier,
         // (equality lookups), manifest min/max file skipping (range /
         // equality / null predicates), then parquet row-group stats
         // inside the files that survive
-        val paths = store.dataFiles(snapshot, pruneKeys, filters.toSeq)
-          .map(new HadoopPath(_)).toSeq
-        // snapshot-pinned file listing: the index is built from the
-        // manifest's explicit file list, so concurrent commits never
-        // change what this scan reads (Iceberg-style isolation)
-        val index = new InMemoryFileIndex(spark, paths, Map.empty,
-          Some(dataSchema), FileStatusCache.getOrCreate(spark), None, None)
+        // snapshot-pinned: the index holds exactly the manifest's
+        // surviving files, so concurrent commits never change what this
+        // scan reads (Iceberg-style isolation)
+        val index = StoreFileIndex(spark,
+          store.dataFiles(snapshot, pruneKeys, filters.toSeq))
         new GraftParquetScanBuilder(spark, index, dataSchema)
           .withPushdown(required, filters)
       }
@@ -341,7 +340,7 @@ private[catalog] class GraftSqlTable(ident: Identifier,
     */
   private class GraftParquetScanBuilder(
       spark: SparkSession,
-      index: InMemoryFileIndex,
+      index: StoreFileIndex,
       dataSchema: StructType)
       extends ParquetScanBuilder(spark, index, dataSchema, dataSchema,
         CaseInsensitiveStringMap.empty()) {

@@ -26,7 +26,9 @@ import org.apache.spark.sql.types._
   * 4096 buckets, a small CDC batch touches a handful of buckets instead
   * of rewriting the table (the analog of Iceberg equality-delete
   * locality). Reads are plain vectorized parquet scans over the current
-  * snapshot's file list, so Catalyst pushdown/pruning apply untouched.
+  * snapshot's file list, planned from the manifest by
+  * [[StoreFileIndex]] (no directory listing), so Catalyst
+  * pushdown/pruning apply untouched.
   */
 class UpsertTable(spark: SparkSession, val location: String) {
   import UpsertTable._
@@ -259,13 +261,15 @@ class UpsertTable(spark: SparkSession, val location: String) {
     * contains the bucket's OTHER keys; callers (Spark's residual
     * filter, through the catalog) re-apply the predicate.
     */
-  def readWhere(keyValues: Map[String, Any]): DataFrame = {
-    val snap = snapshotOrFail
+  def readWhere(keyValues: Map[String, Any]): DataFrame =
+    readWhere(snapshotOrFail, keyValues)
+
+  /** [[readWhere]] over the resolved snapshot `snap`. */
+  def readWhere(snap: Snapshot, keyValues: Map[String, Any]): DataFrame =
     keyPrunedFiles(snap, keyValues) match {
       case Some(sel) => mergedView(sel, snap.schema, snap.keyCols)
       case None => readSnapshot(snap)
     }
-  }
 
   /** The file subset a reverse lookup `column IN values` must read:
     * every DELTA file (recent commits — always kept, so tombstones and
@@ -338,40 +342,39 @@ class UpsertTable(spark: SparkSession, val location: String) {
 
   /** Current-state view over a file subset: base files verbatim when
     * no deltas are present (the zero-overhead fast path — a single
-    * vectorized scan); otherwise base ∪ deltas normalized to the
-    * latest `__seq` per key (base rows rank 0, every delta carries its
-    * committing version) with `d` tombstones dropped.
+    * vectorized scan); otherwise the latest delta row per key (by
+    * `__seq`, the committing version) replaces that key's base row,
+    * and `d` tombstones drop.
     *
-    * The overlay is declarative — two parquet scans, a union, and a
-    * `max_by` partial aggregation — so Catalyst plans it like any
-    * query: key filters push through the aggregation into both scans,
-    * and the shuffle is bounded by distinct keys per partition
-    * (see [[ChangelogNormalize]]). This is the read tax merge-on-read
-    * trades for O(batch) commits; [[compact]] pays it down.
+    * The overlay is declarative, so Catalyst plans it like any query:
+    * the deltas alone are normalized (a `max_by` partial aggregation
+    * bounded by distinct changed keys, see [[ChangelogNormalize]]);
+    * the base is `left_anti`-joined on the changed keys, with no
+    * shuffle or sort of base rows, and unioned with the surviving
+    * latest delta rows. Sound because a key lives in at most one base
+    * file ([[FileEntry]]) and every delta outranks base. Keys compare
+    * null-safely, so a null key overlays as it groups. This is the
+    * read tax merge-on-read trades for O(batch) commits; [[compact]]
+    * pays it down.
     */
   private def mergedView(files: Seq[FileEntry], schema: StructType,
       keys: Seq[String]): DataFrame = {
     val (deltas, bases) = files.partition(FileEntry.isDelta)
-    if (deltas.isEmpty) return readFiles(bases, schema)
+    val base = readFiles(bases, schema)
+    if (deltas.isEmpty) return base
     val deltaSchema = StructType(schema.fields ++ Seq(
       StructField(OpCol, StringType), StructField(SeqCol, LongType)))
-    val base = readFiles(bases, schema)
-      .withColumn(OpCol, lit("u")).withColumn(SeqCol, lit(0L))
-    val delta = readFiles(deltas, deltaSchema)
     val latest = ChangelogNormalize.latestByKey(
-      base.unionByName(delta), keys, SeqCol)
-    latest.where(col(OpCol) =!= "d")
-      .select(schema.fieldNames.map(col).toSeq: _*)
+      readFiles(deltas, deltaSchema), keys, SeqCol)
+    val changed = latest.select(keys.map(k => col(k).as(s"__changed_$k")): _*)
+    base.join(changed,
+        keys.map(k => col(k) <=> col(s"__changed_$k")).reduce(_ && _), "left_anti")
+      .unionByName(latest.where(col(OpCol) =!= "d")
+        .select(schema.fieldNames.map(col).toSeq: _*))
   }
 
   private def readFiles(files: Seq[FileEntry], schema: StructType): DataFrame =
-    if (files.isEmpty) {
-      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-    } else {
-      // explicit schema: older files lacking newly-added columns yield
-      // nulls — additive evolution without rewrites
-      spark.read.schema(schema).parquet(files.map(f => s"$location/${f.path}"): _*)
-    }
+    StoreFileIndex.read(spark, files.map(f => s"$location/${f.path}"), schema)
 
   /** CDC/upsert merge of one micro-batch (SURVEY.md §2.3 C1/C2/C4).
     *
@@ -793,7 +796,7 @@ class UpsertTable(spark: SparkSession, val location: String) {
     }
     if (unservable)
       commitRewrite(snap, snap.numBuckets, newSchema,
-        align(readFiles(snap.files, old), newSchema), operation = "evolve")
+        align(readSnapshot(snap), newSchema), operation = "evolve")
     else
       publish(snap.copy(
         version = snap.version + 1,
@@ -1136,8 +1139,8 @@ class UpsertTable(spark: SparkSession, val location: String) {
       val fpp = LookupBloomFpp
       val sizes = nonNull.map { case (k, n) => k -> math.max(n, 64L) }
       val bc = spark.sparkContext.broadcast(sizes)
-      val wide = spark.read.schema(StructType(cols.map(schema(_))))
-        .parquet(rels.map(r => s"$outDir/$r"): _*)
+      val wide = StoreFileIndex.read(spark, rels.map(r => s"$outDir/$r"),
+          StructType(cols.map(schema(_))))
         .select((input_file_name() +: cols.map(col)): _*)
       // partition-local blooms, merged driver-side
       val partial = wide.rdd.mapPartitions { it =>

@@ -2,20 +2,18 @@ package graft.streaming
 
 import java.util
 
-import org.apache.hadoop.fs.{Path => HadoopPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.execution.datasources.{FileStatusCache, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.store.{SnapshotLog, UpsertTable}
+import graft.store.{SnapshotLog, StoreFileIndex, UpsertTable}
 
 /** Streaming source over an [[UpsertTable]]'s change feed — the
   * "dynamic table" role at the heart of the reference (a continuously
@@ -155,18 +153,18 @@ private[streaming] class ChangeFeedStream(location: String,
       : Array[InputPartition] = {
     val from = start.asInstanceOf[VersionOffset].v
     val to = end.asInstanceOf[VersionOffset].v
-    val paths: Seq[HadoopPath] =
+    val paths: Seq[String] =
       if (to <= from) Seq.empty
       else store.changeFeedEntries(from, to).flatMap { case (_, _, deltas) =>
-        deltas.map(f => new HadoopPath(s"$location/${f.path}"))
+        deltas.map(f => s"$location/${f.path}")
       }
-    // Spark's own DSv2 parquet batch over the pinned file list: the
-    // files already carry __op and __seq(=commit version) columns, so
-    // no per-row custom reader is needed — vectorized reading and
-    // whole-stage codegen come for free (the S7 batch-scan shape)
-    val index = new InMemoryFileIndex(spark, paths, Map.empty,
-      Some(feedSchema), FileStatusCache.getOrCreate(spark), None, None)
-    currentBatch = new FeedScanBuilder(index).buildAll().toBatch
+    // Spark's own DSv2 parquet batch over the pinned file list (the
+    // store's manifest-built index: no listing job): the files already
+    // carry __op and __seq(=commit version) columns, so no per-row
+    // custom reader is needed — vectorized reading and whole-stage
+    // codegen come for free (the S7 batch-scan shape)
+    currentBatch = new FeedScanBuilder(StoreFileIndex(spark, paths))
+      .buildAll().toBatch
     currentBatch.planInputPartitions()
   }
 
@@ -180,7 +178,7 @@ private[streaming] class ChangeFeedStream(location: String,
     * schema with no pushdown (streaming consumers take the whole
     * changelog; filters apply above the scan).
     */
-  private class FeedScanBuilder(index: InMemoryFileIndex)
+  private class FeedScanBuilder(index: StoreFileIndex)
       extends ParquetScanBuilder(spark, index, feedSchema, feedSchema,
         CaseInsensitiveStringMap.empty()) {
     def buildAll(): Scan = { pruneColumns(feedSchema); build() }

@@ -30,4 +30,10 @@ object GraftSqlShims {
 
   def expressionOf(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
+
+  /** `schema` with every field nullable at every depth — what a file
+    * source reads under ([[graft.store.StoreFileIndex.read]]), as
+    * `DataFrameReader` does.
+    */
+  def asNullable(schema: types.StructType): types.StructType = schema.asNullable
 }

@@ -141,4 +141,20 @@ class DeltaMergeSpec extends AnyFunSuite {
     assert(spark.sql("SELECT id FROM graft_dm.ns.t ORDER BY id")
       .collect().map(_.getLong(0)).toSeq === Seq(2L))
   }
+
+  test("a rewriting schema evolution keeps the overlaid state of a " +
+      "delta-bearing table") {
+    val t = tmp("graft-dm-evolve")
+    t.create(StructType(Seq(StructField("id", LongType),
+      StructField("n", LongType))), Seq("id"), numBuckets = 2)
+    t.merge((1L to 6L).map(i => (i, i)).toDF("id", "n"))
+    t.merge(Seq((2L, 20L, "u"), (3L, 0L, "d")).toDF("id", "n", "op"),
+      opCol = Some("op"), delta = true)
+    // long -> double is not served by cast-on-read: the data is rewritten
+    t.evolveSchema(StructType(Seq(StructField("id", LongType),
+      StructField("n", DoubleType))))
+    val got = t.read().orderBy("id").collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toSeq
+    assert(got === Seq(1L -> 1.0, 2L -> 20.0, 4L -> 4.0, 5L -> 5.0, 6L -> 6.0))
+  }
 }

@@ -49,4 +49,44 @@ class UpsertPropertySpec extends AnyFunSuite {
       SCTest.Parameters.default.withMinSuccessfulTests(8), prop)
     assert(result.passed, result.status.toString)
   }
+
+  test("merge ≡ sequential map apply with random delta commits and " +
+      "compaction, through read(), SQL and a SQL key lookup") {
+    val wh = Files.createTempDirectory("graft-prop-wh").toString
+    spark.conf.set("spark.sql.catalog.graft_prop",
+      classOf[graft.catalog.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graft_prop.warehouse", wh)
+    val tables = new java.util.concurrent.atomic.AtomicInteger
+    // per batch (at most four): merge-on-read or not, compact after or not
+    val genCommits: Gen[List[(Boolean, Boolean)]] = Gen.listOfN(4,
+      Gen.zip(Gen.oneOf(true, false), Gen.frequency(3 -> false, 1 -> true)))
+    val prop = Prop.forAll(genOps, genSplit, genCommits, Gen.choose(0, 7)) {
+      (ops, split, commits, probe) =>
+        val expected = ops.foldLeft(Map.empty[Int, String]) {
+          case (m, Op(k, v, o)) => if (o == "d") m - k else m + (k -> v)
+        }
+        val name = s"t${tables.incrementAndGet()}"
+        val t = UpsertTable(spark, s"$wh/p/$name")
+        val bounds = (0 :: split).distinct.sorted :+ ops.length
+        bounds.sliding(2).filter(w => w(1) > w(0)).zip(commits).foreach {
+          case (w, (delta, compactAfter)) =>
+            val slice = ops.slice(w(0), w(1)).zipWithIndex
+              .map { case (o, i) => (o.key, o.value, o.op, (w(0) + i).toLong) }
+            t.merge(slice.toDF("key", "value", "op", "off"),
+              opCol = Some("op"), orderCol = Some("off"),
+              autoCreateKeys = Seq("key"), delta = delta)
+            if (compactAfter) t.compact()
+        }
+        def asMap(rows: Array[org.apache.spark.sql.Row]): Map[Int, String] =
+          rows.map(r => r.getInt(0) -> r.getString(1)).toMap
+        val sqlName = s"graft_prop.p.$name"
+        asMap(t.read().collect()) == expected &&
+          asMap(spark.sql(s"SELECT key, value FROM $sqlName").collect()) == expected &&
+          asMap(spark.sql(s"SELECT key, value FROM $sqlName WHERE key = $probe")
+            .collect()) == expected.filter(_._1 == probe)
+    }
+    val result = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(8), prop)
+    assert(result.passed, result.status.toString)
+  }
 }

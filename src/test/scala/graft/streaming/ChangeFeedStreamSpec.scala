@@ -192,4 +192,24 @@ class ChangeFeedStreamSpec extends AnyFunSuite {
     // exactly one data commit landed besides create (no double apply)
     assert(dst.history().count(_._2 == "delta-merge") === 1)
   }
+
+  test("planning a micro-batch over 48 delta files launches no Spark job") {
+    val src = tmpDir("plan")
+    val t = UpsertTable(spark, src)
+    t.create(new org.apache.spark.sql.types.StructType()
+      .add("id", "long").add("v", "string"), Seq("id"), numBuckets = 16)
+    (1 to 3).foreach(c =>
+      t.merge((1L to 200L).map(i => (i, s"v$c")).toDF("id", "v"), delta = true))
+    val deltas = t.currentSnapshot.get.files.count(graft.store.FileEntry.isDelta)
+    assert(deltas >= 33)
+    val stream = new ChangeFeedStream(src, ChangeFeed.rawSchema(spark, src), 0L)
+    var parts = Array.empty[org.apache.spark.sql.connector.read.InputPartition]
+    val jobs = TestSpark.jobsDuring {
+      parts = stream.planInputPartitions(stream.initialOffset(), stream.latestOffset())
+    }
+    assert(jobs.isEmpty, s"planning launched ${jobs.mkString(" | ")}")
+    // the planned batch covers every delta file of the range
+    assert(parts.map(_.asInstanceOf[org.apache.spark.sql.execution.datasources
+      .FilePartition].files.length).sum === deltas)
+  }
 }
