@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.GraftSparkShims
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+
 /** Benchmark main. Prints ONE JSON line:
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
   *
@@ -17,6 +22,15 @@ package graft
   * displace the poisoned ones from the fastest set. Queries still
   * spread-noisy after retries land in `load_warning` — persistent
   * contention, not the code.
+  *
+  * Each query's fastest rep also records its execution counters —
+  * input bytes, shuffle read/write bytes, task CPU, jobs and stages —
+  * in the full record file. Unlike wall-clock they are (nearly)
+  * insensitive to external load, so they tell a real plan change
+  * (fewer bytes scanned or shuffled, fewer stages) from noise.
+  *
+  * Exits 1, after writing the record and printing its lines, when any
+  * query failed.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -43,17 +57,45 @@ object Bench {
     require(names.nonEmpty,
       s"SPARK_GRAFT_ONLY=${sys.env.getOrElse("SPARK_GRAFT_ONLY", "")} " +
         "matches no query — check the names against SparkEntry.queries")
+    // input, shuffle read, shuffle write bytes, task CPU ns, jobs, stages
+    val counters = Seq.fill(6)(new AtomicLong)
+    val Seq(inBytes, shufRead, shufWrite, cpuNs, jobs, stages) = counters
+    val listener = new SparkListener {
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        Option(t.taskMetrics).foreach { m =>
+          inBytes.addAndGet(m.inputMetrics.bytesRead)
+          shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
+          shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+          cpuNs.addAndGet(m.executorCpuTime)
+        }
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+        stages.incrementAndGet(); ()
+      }
+    }
+    // query -> (seconds, counters) of its fastest successful rep
+    val profile = scala.collection.mutable.Map.empty[String, (Double, Seq[Long])]
     // a failed rep records +Inf, never its (near-zero) failure time —
     // min-reporting must not let broken code improve the record
     def timeOne(name: String): Double = {
+      counters.foreach(_.set(0))
+      spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
       // noop sink: fully executes the physical plan (sorts, projections,
       // exchanges) without Catalyst pruning it the way `.count()` would
-      try {
+      val t = try {
         SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
       } catch { case _: Throwable => Double.PositiveInfinity }
+      // the listener bus is async: drain it before reading the counters
+      GraftSparkShims.drainListenerBus(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+      if (!t.isInfinity && profile.get(name).forall(t < _._1))
+        profile(name) = (t, counters.map(_.get))
+      t
     }
     val acc = scala.collection.mutable.Map.empty[String, Vector[Double]]
       .withDefaultValue(Vector.empty)
@@ -94,8 +136,12 @@ object Bench {
         case c if c < ' ' => f"\\u${c.toInt}%04x"
         case c => c.toString
       } + "\""
+    val prof = names.filter(profile.contains).map { n =>
+      val Seq(in, sr, sw, cpu, j, st) = profile(n)._2
+      s""""$n":{"input_bytes":$in,"shuffle_read_bytes":$sr,"shuffle_write_bytes":$sw,"task_cpu_ms":${cpu / 1000000},"jobs":$j,"stages":$st}"""
+    }.mkString("{", ",", "}")
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"queries":$qs$warn$fail,"sf":${jstr(sfDir)}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"queries":$qs$warn$fail,"profile":$prof,"sf":${jstr(sfDir)}}"""
     // Persist the FULL canonical record (every query, full-precision
     // seconds) to a file — the tracked BENCH_LOCAL.json copy is the
     // durable per-query record. Default under the build dir: a bare
@@ -149,5 +195,6 @@ object Bench {
     // bench_ms line + sbt's success line must all fit the ~2 KB tail
     println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","reps":$reps,"n_queries":${names.size},"n_failed":${failed.size},"queries":$slow,"queries_note":"3 slowest; full map in chunks + full_record"$warn$fail,"full_record":${jstr(out)},"sf":${jstr(sfDir)}}""")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

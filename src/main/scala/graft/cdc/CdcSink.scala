@@ -27,12 +27,6 @@ object CdcSink {
   def targetPath(warehouseDir: String, table: String): String =
     s"$warehouseDir/cdc/${table}_postgres"
 
-  /** Disable to skip the per-batch new-field key scan for tables whose
-    * schema is locked (then steady state does ZERO extra passes over
-    * payload strings; new payload fields are silently ignored).
-    */
-  val EvolveConf = "graft.cdc.evolveSchema"
-
   /** Number of full `spark.read.json` schema-inference passes run —
     * test-visible proof that steady-state batches reuse the stored
     * schema instead of re-inferring (VERDICT r2 "What's wrong" #2).
@@ -82,8 +76,7 @@ object CdcSink {
     * into struct-typed columns — or when a stored type has drifted at
     * any path, node or leaf — the sink's auto-create/evolve
     * inference), then flatten `row.*`, convert declared/derived
-    * logical columns, and CDC-merge. Disable re-inference entirely via
-    * [[EvolveConf]] to lock schemas.
+    * logical columns, and CDC-merge.
     *
     * Scale notes: the only driver-side materialization is the routing
     * aggregate — one row per table, its name and latest wire schema
@@ -163,8 +156,6 @@ object CdcSink {
       val versions = inParallel(spark, routed) { case (table, framed) =>
         val rows = meta.where(col("__table") === table)
         val target = UpsertTable(spark, targetPath(warehouseDir, table))
-        val evolve =
-          spark.conf.getOption(EvolveConf).forall(_.toBoolean)
 
         // Full type inference (`spark.read.json`) is a second complete
         // parse of every payload string — run it only on first sight
@@ -192,7 +183,7 @@ object CdcSink {
           case None => infer()
           case Some(cached) =>
             // key-name scan: no type inference, no schema merging —
-            // a narrow existence check, and skippable via EvolveConf.
+            // a narrow existence check.
             // Keys whose value is an explicit JSON null are ignored:
             // dropFieldIfAllNull would drop them again, so re-inferring
             // can never change the schema — without this filter a
@@ -213,8 +204,7 @@ object CdcSink {
                     .isNotNull)
                   .select(lit(1).as("hit"))
             }
-            val newField = evolve &&
-              checks.reduce(_ unionAll _).limit(1).count() > 0
+            val newField = checks.reduce(_ unionAll _).limit(1).count() > 0
             if (newField) infer() else cached
         }
         // type-drift guard (bare path only): a stale cached type (a
@@ -225,7 +215,7 @@ object CdcSink {
         // loudly (long→string), never silently nulls.
         def bareFinalSchema(payloadSchema: org.apache.spark.sql.types.StructType) =
           cachedSchema match {
-            case Some(cached) if evolve && (payloadSchema eq cached) =>
+            case Some(cached) if payloadSchema eq cached =>
               val parsed = rows.withColumn("__row",
                 from_json(col("__payload"), cached))
               // check every path, STRUCT NODES included: a drifted
@@ -349,9 +339,9 @@ object CdcSink {
     * nested inside ARRAY-OF-STRUCT columns are not scanned (no scalar
     * JSON path addresses "any element"), so new element subfields
     * appear only via first-sight inference and element-level type
-    * drift is not auto-detected. Lock such schemas via [[EvolveConf]]
-    * or keep array payloads schema-stable. (Array-column drift to a
-    * scalar IS caught: the array path itself is checked.) */
+    * drift is not auto-detected: keep array payloads schema-stable.
+    * (Array-column drift to a scalar IS caught: the array path itself
+    * is checked.) */
   private[cdc] def jsonLevels(st: org.apache.spark.sql.types.StructType,
       path: String): Seq[(String, Seq[String])] =
     (path -> st.fieldNames.toSeq) +: st.fields.toSeq.flatMap {

@@ -25,7 +25,10 @@ import org.apache.spark.sql.types._
   * rewrites the buckets that contain batch keys — at 100 TB with e.g.
   * 4096 buckets, a small CDC batch touches a handful of buckets instead
   * of rewriting the table (the analog of Iceberg equality-delete
-  * locality). Reads are plain vectorized parquet scans over the current
+  * locality). Every commit that writes data — merge, compaction,
+  * clustering, rewrites, overwrite — writes through one bucketed
+  * writer ([[writeFiles]]): one file per written bucket, sorted by key
+  * within it. Reads are plain vectorized parquet scans over the current
   * snapshot's file list, planned from the manifest by
   * [[StoreFileIndex]] (no directory listing), so Catalyst
   * pushdown/pruning apply untouched.
@@ -68,15 +71,14 @@ class UpsertTable(spark: SparkSession, val location: String) {
     keys.foreach(k => require(schema.fieldNames.contains(k), s"missing key col $k"))
     cur.getOrElse {
       Files.createDirectories(root)
-      publish(Snapshot(
-        version = 1L,
+      publish(0L, "create", Snapshot(
+        version = 0L,
         schemaJson = allNullable(schema).json,
         keyCols = keys,
         numBuckets = buckets,
         files = Seq.empty,
         committed = Map.empty,
-        timestampMs = System.currentTimeMillis(),
-        operation = "create",
+        timestampMs = 0L,
         lookupCols = confLookupCols))
     }
   }
@@ -407,6 +409,12 @@ class UpsertTable(spark: SparkSession, val location: String) {
     *                 over every live file).
     * @return the snapshot this merge committed — or, for a replayed
     *         batch, the current one it left untouched
+    *
+    * The commit kind is decided before any touch set: a delta commit
+    * writes the batch straight through [[writeFiles]] and computes
+    * none; a rewriting commit collects the touched buckets under each
+    * live spec to choose the files it rewrites, then writes through
+    * the same writer.
     */
   def merge(
       batch: DataFrame,
@@ -466,28 +474,43 @@ class UpsertTable(spark: SparkSession, val location: String) {
         require(counted.where(col("__cnt") > 1).limit(1).count() == 0L,
           s"batch has duplicate keys for $location but no orderCol; " +
             "pass orderCol so last-wins is deterministic")
-      val bucketOf = bucketExpr(snap.keyCols, snap.numBuckets)
+      val committed = snap.committed ++
+        (for { s <- streamId; b <- batchId } yield s -> b)
+
+      // A READ-PROMOTABLE widening does not touch extra buckets: files
+      // in untouched buckets keep their narrow physical type and are
+      // served by cast-on-read under the manifest schema; the physical
+      // rewrite is deferred to [[rewriteData]] maintenance. A 100 TB
+      // table therefore absorbs an int→long evolution without a full
+      // rewrite inside a merge commit. Only a widening the parquet
+      // reader cannot serve (long→double) still forces the full
+      // rewrite — the manifest schema must stay readable over every
+      // live file.
+      val unservableWiden = unservableWidening(oldSchema, newSchema)
+
+      if (delta && !unservableWiden) {
+        // merge-on-read commit: write ONLY the normalized batch, as
+        // per-bucket delta files carrying the op and this commit's
+        // sequence — existing files are untouched, so the write cost
+        // is O(batch) regardless of how many buckets the keys span,
+        // and no touch set is needed to size or route it
+        val version = snap.version + 1
+        val deltas = writeFiles(snap, normalized.withColumn(SeqCol, lit(version)),
+            snap.numBuckets, newSchema, snap.keyCols.map(col))
+          .map(_.copy(kind = FileEntry.Delta, seq = version))
+        return publish(snap.version, "delta-merge", snap.copy(
+          schemaJson = newSchema.json,
+          files = snap.files ++ deltas,
+          committed = committed))
+      }
 
       // buckets touched by this batch — bounded by numBuckets, safe to
-      // collect. A READ-PROMOTABLE widening does not touch extra
-      // buckets: files in untouched buckets keep their narrow physical
-      // type and are served by cast-on-read under the manifest schema;
-      // the physical rewrite is deferred to [[rewriteData]]
-      // maintenance. A 100 TB table therefore absorbs an int→long
-      // evolution without a full rewrite inside a merge commit. Only a
-      // widening the parquet reader cannot serve (long→double) still
-      // forces the full rewrite — the manifest schema must stay
-      // readable over every live file.
-      val unservableWiden = oldSchema.fields.exists { f =>
-        newSchema.fields.find(_.name == f.name).exists(nf =>
-          nf.dataType != f.dataType && !promotableOnRead(f.dataType, nf.dataType))
-      }
-      // after a lazy respec the manifest carries files under more than
-      // one bucket spec; the touch set is computed PER LIVE SPEC (one
-      // bounded distinct-collect each — at most two specs in steady
-      // state), so a batch key finds its bucket under every layout it
-      // might live in. Touched old-spec files are rewritten under the
-      // CURRENT spec — the incremental migration path.
+      // collect. After a lazy respec the manifest carries files under
+      // more than one bucket spec; the touch set is computed PER LIVE
+      // SPEC (one bounded distinct-collect each — at most two specs in
+      // steady state), so a batch key finds its bucket under every
+      // layout it might live in. Touched old-spec files are rewritten
+      // under the CURRENT spec — the incremental migration path.
       val liveSpecs =
         (snap.files.map(fileSpec(snap, _)) :+ snap.numBuckets).distinct
       val touchedBySpec: Map[Int, Set[Int]] = liveSpecs.map { n =>
@@ -495,43 +518,6 @@ class UpsertTable(spark: SparkSession, val location: String) {
         else normalized.select(bucketExpr(snap.keyCols, n).as("b"))
           .distinct().collect().map(_.getInt(0)).toSet)
       }.toMap
-      val affected: Set[Int] = touchedBySpec(snap.numBuckets)
-      // write stage sizing, both commit kinds below: min(touched
-      // buckets, cores) tasks, hash-routed on __bucket. A bucket lives
-      // in exactly one task and each task writes one file per bucket it
-      // holds, so the layout is one file per touched bucket at any core
-      // count — a 16-bucket commit on 4 cores runs 4 write tasks, not 16
-      val writeTasks = math.max(1,
-        math.min(affected.size, spark.sparkContext.defaultParallelism))
-
-      val version = snap.version + 1
-      // unique per-attempt dir: a racing/crashed writer can never
-      // clobber files another attempt already committed (the manifest
-      // references only its own attempt's paths; losers leave orphans
-      // that never become visible)
-      val outDir = s"$location/data/v$version-$attemptId"
-
-      if (delta && !unservableWiden) {
-        // merge-on-read commit: write ONLY the normalized batch, as
-        // per-bucket delta files carrying the op and this commit's
-        // sequence — existing files are untouched, so the write cost
-        // is O(batch) regardless of how many buckets the keys span
-        normalized.withColumn(SeqCol, lit(version))
-          .withColumn("__bucket", bucketOf)
-          .repartition(writeTasks, col("__bucket"))
-          .sortWithinPartitions(col("__bucket") +: snap.keyCols.map(col): _*)
-          .write.partitionBy("__bucket").mode("overwrite").parquet(outDir)
-        val newFiles = newFileEntries(outDir, newSchema, snap.lookupCols)
-          .map(_.copy(kind = FileEntry.Delta, seq = version))
-        return publish(snap.copy(
-          version = version,
-          schemaJson = newSchema.json,
-          files = snap.files ++ newFiles,
-          committed = snap.committed ++
-            (for { s <- streamId; b <- batchId } yield s -> b),
-          timestampMs = System.currentTimeMillis(),
-          operation = "delta-merge"))
-      }
 
       val (oldAffected, untouched) = snap.files.partition(f =>
         touchedBySpec(fileSpec(snap, f))(f.bucket))
@@ -547,27 +533,12 @@ class UpsertTable(spark: SparkSession, val location: String) {
       val survivors = oldDf.join(batchKeys, snap.keyCols, "left_anti")
       val upserts = normalized.where(col("__op") =!= "d").select(dataCols.map(col): _*)
 
-      val out = survivors.unionByName(upserts)
-        .withColumn("__bucket", bucketOf)
-      // sortWithinPartitions on (__bucket, keys): no extra shuffle, but
-      // data files get key-clustered row groups, so parquet min/max
-      // stats prune key-range scans inside a bucket too; __bucket leads
-      // so the writer's partition ordering is satisfied and it never
-      // inserts its own (unstable) re-sort
-      out.repartition(writeTasks, col("__bucket"))
-        .sortWithinPartitions(col("__bucket") +: snap.keyCols.map(col): _*)
-        .write.partitionBy("__bucket").mode("overwrite").parquet(outDir)
-
-      val newFiles = newFileEntries(outDir, newSchema, snap.lookupCols)
-
-      publish(snap.copy(
-        version = version,
+      val newFiles = writeFiles(snap, survivors.unionByName(upserts),
+        snap.numBuckets, newSchema, snap.keyCols.map(col))
+      publish(snap.version, "merge", snap.copy(
         schemaJson = newSchema.json,
         files = untouched ++ newFiles,
-        committed = snap.committed ++
-          (for { s <- streamId; b <- batchId } yield s -> b),
-        timestampMs = System.currentTimeMillis(),
-        operation = "merge"))
+        committed = committed))
     } finally counted.unpersist()
   }
 
@@ -582,7 +553,9 @@ class UpsertTable(spark: SparkSession, val location: String) {
     require(newNumBuckets > 0, "bucket count must be positive")
     val snap = snapshotOrFail
     if (snap.numBuckets == newNumBuckets) return
-    rewriteAll(snap, newNumBuckets)
+    publish(snap.version, "rewrite", snap.copy(numBuckets = newNumBuckets,
+      files = writeFiles(snap, readSnapshot(snap), newNumBuckets, snap.schema,
+        snap.keyCols.map(col))))
   }
 
   /** LAZY bucket-spec evolution — the Iceberg partition-spec-evolution
@@ -596,19 +569,15 @@ class UpsertTable(spark: SparkSession, val location: String) {
     * under the new layout, and [[compact]] folds whole old-spec groups
     * over. Read correctness never depended on the layout (the merged
     * view is key-global), so readers and time travel are undisturbed;
-    * the transient cost is one extra bounded touch-set probe per merge
-    * and point lookups opening one bucket per live spec.
+    * the transient cost is one extra bounded touch-set probe per
+    * rewriting merge and point lookups opening one bucket per live spec.
     */
   def rebucketLazy(newNumBuckets: Int): Unit = synchronized {
     require(newNumBuckets > 0, "bucket count must be positive")
     val snap = snapshotOrFail
     if (snap.numBuckets == newNumBuckets) return
-    publish(snap.copy(
-      version = snap.version + 1,
-      numBuckets = newNumBuckets,
-      files = snap.files.map(f => f.copy(spec = fileSpec(snap, f))),
-      timestampMs = System.currentTimeMillis(),
-      operation = "respec"))
+    publish(snap.version, "respec", snap.copy(numBuckets = newNumBuckets,
+      files = snap.files.map(f => f.copy(spec = fileSpec(snap, f)))))
   }
 
   /** Maintenance rewrite of every data file under the current manifest
@@ -620,7 +589,8 @@ class UpsertTable(spark: SparkSession, val location: String) {
     */
   def rewriteData(): Unit = synchronized {
     val snap = snapshotOrFail
-    rewriteAll(snap, snap.numBuckets)
+    publish(snap.version, "rewrite", snap.copy(files = writeFiles(snap,
+      readSnapshot(snap), snap.numBuckets, snap.schema, snap.keyCols.map(col))))
   }
 
   /** Targeted compaction: collapse ONLY the buckets holding more than
@@ -677,26 +647,13 @@ class UpsertTable(spark: SparkSession, val location: String) {
       toRewrite = toRewrite ++ snap.files.filter(f =>
         fileSpec(snap, f) != snap.numBuckets && !sel(f))
     }
-    val selected = toRewrite.toSet
-    val untouched = snap.files.filterNot(selected)
-    val sch = snap.schema
-    val version = snap.version + 1
-    val outDir = s"$location/data/v$version-$attemptId"
+    val untouched = snap.files.filterNot(toRewrite.toSet)
     // current-state view of just those groups (delta overlay applied,
     // tombstones dropped), written back bucket-partitioned under the
     // CURRENT spec — old-spec survivors migrate here
-    mergedView(toRewrite, sch, snap.keyCols)
-      .withColumn("__bucket", bucketExpr(snap.keyCols, snap.numBuckets))
-      .repartition(over.size, col("__bucket"))
-      // __bucket first: satisfies the writer's partition ordering so no
-      // unstable re-sort is inserted and key clustering survives
-      .sortWithinPartitions(col("__bucket") +: snap.keyCols.map(col): _*)
-      .write.partitionBy("__bucket").mode("overwrite").parquet(outDir)
-    publish(snap.copy(
-      version = version,
-      files = untouched ++ newFileEntries(outDir, sch, snap.lookupCols),
-      timestampMs = System.currentTimeMillis(),
-      operation = "compact"))
+    val written = writeFiles(snap, mergedView(toRewrite, snap.schema, snap.keyCols),
+      snap.numBuckets, snap.schema, snap.keyCols.map(col))
+    publish(snap.version, "compact", snap.copy(files = untouched ++ written))
     over.size
   }
 
@@ -731,49 +688,44 @@ class UpsertTable(spark: SparkSession, val location: String) {
       val mins = zCols.indices.map(i => d(2 * i))
       val maxs = zCols.indices.map(i => d(2 * i + 1))
       val z = ZOrder.zValue(zCols.map(col), mins, maxs)
-      val version = snap.version + 1
-      val outDir = s"$location/data/v$version-$attemptId"
-      df.withColumn("__bucket", bucketExpr(snap.keyCols, snap.numBuckets))
-        .withColumn("__z", z)
-        .repartition(snap.numBuckets, col("__bucket"))
-        // __bucket leads the sort so the writer's required partition
-        // ordering is already satisfied — otherwise FileFormatWriter
-        // inserts its own (unstable) sort on __bucket and the z order
-        // inside each bucket is lost
-        .sortWithinPartitions(col("__bucket"), col("__z"))
-        .drop("__z")
-        .write.partitionBy("__bucket")
-        .option("maxRecordsPerFile", maxRowsPerFile)
-        .mode("overwrite").parquet(outDir)
-      publish(snap.copy(
-        version = version,
-        files = newFileEntries(outDir, sch, snap.lookupCols),
-        timestampMs = System.currentTimeMillis(),
-        operation = "cluster"))
+      publish(snap.version, "cluster", snap.copy(files = writeFiles(snap, df,
+        snap.numBuckets, sch, Seq(z), maxRecordsPerFile = Some(maxRowsPerFile))))
     }
 
-  private def rewriteAll(snap: Snapshot, numBuckets: Int): Unit =
-    commitRewrite(snap, numBuckets, snap.schema, readSnapshot(snap))
-
-  private def commitRewrite(snap: Snapshot, numBuckets: Int,
-      schema: StructType, df: DataFrame,
-      operation: String = "rewrite"): Unit = {
-    val bucketOf = bucketExpr(snap.keyCols, numBuckets)
-    val version = snap.version + 1
-    val outDir = s"$location/data/v$version-$attemptId"
-    df.withColumn("__bucket", bucketOf)
-      .repartition(numBuckets, col("__bucket"))
-      // __bucket first: see compact — keeps the writer from re-sorting
-      .sortWithinPartitions(col("__bucket") +: snap.keyCols.map(col): _*)
-      .write.partitionBy("__bucket").mode("overwrite").parquet(outDir)
-    val newFiles = newFileEntries(outDir, schema, snap.lookupCols)
-    publish(snap.copy(
-      version = version,
-      schemaJson = schema.json,
-      numBuckets = numBuckets,
-      files = newFiles,
-      timestampMs = System.currentTimeMillis(),
-      operation = operation))
+  /** The one writer of store data files, for every commit kind: routes
+    * `rows` to their key bucket under `numBuckets` (the current count,
+    * or [[rebucket]]'s target), sorts each bucket by `order` (the keys;
+    * [[cluster]]'s z-value) and writes it into the next version's
+    * attempt directory, returning the new files' manifest entries.
+    *
+    * Sizing, the same for every commit: min(numBuckets, cores) tasks,
+    * hash-routed on `__bucket`. A bucket lands in exactly one task and
+    * each task writes one file per bucket it holds (split only by
+    * `maxRecordsPerFile`), so the layout is one file per written bucket
+    * at any core count — a 16-bucket commit on 4 cores runs 4 write
+    * tasks, not 16, and no touched-bucket count is needed to size it.
+    * `__bucket` leads the sort, so the writer's partition ordering is
+    * satisfied and it never inserts its own (unstable) re-sort that
+    * would lose `order`; key order gives key-clustered row groups, so
+    * parquet min/max stats prune key-range scans inside a bucket too.
+    * The attempt directory is unique: a racing or crashed writer can
+    * never clobber files another attempt already committed (the
+    * manifest references only its own attempt's paths; losers leave
+    * orphans that never become visible).
+    */
+  private def writeFiles(snap: Snapshot, rows: DataFrame, numBuckets: Int,
+      schema: StructType, order: Seq[Column],
+      maxRecordsPerFile: Option[Long] = None): Seq[FileEntry] = {
+    val outDir = s"$location/data/v${snap.version + 1}-$attemptId"
+    val tasks = math.max(1,
+      math.min(numBuckets, spark.sparkContext.defaultParallelism))
+    rows.withColumn("__bucket", bucketExpr(snap.keyCols, numBuckets))
+      .repartition(tasks, col("__bucket"))
+      .sortWithinPartitions(col("__bucket") +: order: _*)
+      .write.partitionBy("__bucket")
+      .options(maxRecordsPerFile.map("maxRecordsPerFile" -> _.toString).toMap)
+      .mode("overwrite").parquet(outDir)
+    newFileEntries(outDir, schema, snap.lookupCols)
   }
 
   /** DDL-driven schema evolution (`ALTER TABLE … ADD COLUMN` / type
@@ -790,19 +742,12 @@ class UpsertTable(spark: SparkSession, val location: String) {
     val old = snap.schema
     val (newSchema, _) = evolve(old, incoming)
     if (newSchema == old) return
-    val unservable = old.fields.exists { f =>
-      newSchema.fields.find(_.name == f.name).exists(nf =>
-        nf.dataType != f.dataType && !promotableOnRead(f.dataType, nf.dataType))
-    }
-    if (unservable)
-      commitRewrite(snap, snap.numBuckets, newSchema,
-        align(readSnapshot(snap), newSchema), operation = "evolve")
-    else
-      publish(snap.copy(
-        version = snap.version + 1,
-        schemaJson = newSchema.json,
-        timestampMs = System.currentTimeMillis(),
-        operation = "evolve"))
+    val files =
+      if (!unservableWidening(old, newSchema)) snap.files
+      else writeFiles(snap, align(readSnapshot(snap), newSchema),
+        snap.numBuckets, newSchema, snap.keyCols.map(col))
+    publish(snap.version, "evolve",
+      snap.copy(schemaJson = newSchema.json, files = files))
   }
 
   /** Align a frame's columns to `schema` types: missing columns become
@@ -861,20 +806,9 @@ class UpsertTable(spark: SparkSession, val location: String) {
       .count().where(col("count") > 1).limit(1).count()
     require(dups == 0L,
       s"INSERT OVERWRITE batch has duplicate keys for $location")
-    val bucketOf = bucketExpr(snap.keyCols, snap.numBuckets)
-    val version = snap.version + 1
-    val outDir = s"$location/data/v$version-$attemptId"
-    aligned.withColumn("__bucket", bucketOf)
-      .repartition(snap.numBuckets, col("__bucket"))
-      .sortWithinPartitions(col("__bucket") +: snap.keyCols.map(col): _*)
-      .write.partitionBy("__bucket").mode("overwrite").parquet(outDir)
-    val newFiles = newFileEntries(outDir, newSchema, snap.lookupCols)
-    publish(snap.copy(
-      version = version,
-      schemaJson = newSchema.json,
-      files = newFiles,
-      timestampMs = System.currentTimeMillis(),
-      operation = "overwrite"))
+    publish(snap.version, "overwrite", snap.copy(schemaJson = newSchema.json,
+      files = writeFiles(snap, aligned, snap.numBuckets, newSchema,
+        snap.keyCols.map(col))))
   }
 
   /** Roll the table back to an earlier version — as a NEW commit whose
@@ -899,11 +833,7 @@ class UpsertTable(spark: SparkSession, val location: String) {
     require(missing.isEmpty,
       s"cannot roll back to v$toVersion: ${missing.size} data file(s) " +
         s"already expired, e.g. ${missing.headOption.map(_.path).getOrElse("")}")
-    publish(target.copy(
-      version = cur.version + 1,
-      committed = cur.committed,
-      timestampMs = System.currentTimeMillis(),
-      operation = "rollback"))
+    publish(cur.version, "rollback", target.copy(committed = cur.committed))
   }
 
   /** Orphan-file GC (the `remove_orphan_files` half of warehouse
@@ -1050,7 +980,11 @@ class UpsertTable(spark: SparkSession, val location: String) {
   private def confLookupCols: Seq[String] = spark.conf.getOption(LookupBloomsConf)
     .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
 
-  private def publish(s: Snapshot): Snapshot = {
+  /** Commit `next` as the version after `prev`, stamped with the commit
+    * time and `operation` — the one place a commit's version is set. */
+  private def publish(prev: Long, operation: String, next: Snapshot): Snapshot = {
+    val s = next.copy(version = prev + 1,
+      timestampMs = System.currentTimeMillis(), operation = operation)
     SnapshotLog.commit(location, s)
     s
   }
@@ -1276,6 +1210,16 @@ object UpsertTable {
       case (ArrayType(ea, _), ArrayType(eb, _)) => promotableOnRead(ea, eb)
       case _ => false
     })
+
+  /** Whether evolving `old` to `evolved` widens a column the parquet
+    * reader cannot serve by cast-on-read: that commit must rewrite
+    * every live file, so the manifest schema stays readable over all.
+    */
+  private def unservableWidening(old: StructType, evolved: StructType): Boolean =
+    old.fields.exists { f =>
+      evolved.fields.find(_.name == f.name).exists(nf =>
+        nf.dataType != f.dataType && !promotableOnRead(f.dataType, nf.dataType))
+    }
 
   /** Stored columns are always nullable (additive evolution fills nulls). */
   def allNullable(s: StructType): StructType =
