@@ -2,6 +2,7 @@ package graft.store
 
 import java.nio.charset.StandardCharsets
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
@@ -9,8 +10,12 @@ import org.apache.hadoop.fs.{Path => HadoopPath}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.{WriteJobStatsTracker, WriteTaskStats, WriteTaskStatsTracker}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
+import org.apache.spark.util.sketch.BloomFilter
 
 /** Per-file column bounds recorded in the manifest, the Iceberg
   * manifest-stats analog (reference: the Iceberg v2 tables written by
@@ -45,9 +50,9 @@ object FileStats {
 
   /** Read one just-written file's footer: its row count, and
     * row-group statistics aggregated per supported top-level column.
-    * Runs driver-side at commit time over only the files the commit
-    * produced (bounded by affected buckets), exactly where Iceberg
-    * collects its manifest metrics. Any anomaly → None (stats are an
+    * Runs in the write task, on the file that task just closed
+    * ([[FileEntryTracker]]), so the writer hands the commit its files'
+    * metrics as Iceberg's writers do. Any anomaly → None (stats are an
     * optimization, never a correctness dependency).
     */
   def collect(conf: Configuration, absPath: String,
@@ -210,3 +215,82 @@ object FileStats {
     x.length - y.length
   }
 }
+
+/** The write job's report of what it wrote: one [[FileEntry]] per
+  * committed file, built by the write task that wrote it — the bucket
+  * the file was opened under, bounds from its footer once it is closed
+  * ([[FileStats.collect]]), and a Bloom filter per lookup column over
+  * the non-null values the task wrote into it. A commit takes its
+  * manifest entries from here, as Iceberg's writers hand the committer
+  * their `DataFile` metrics: nothing lists the output directory or
+  * re-reads a new file.
+  *
+  * Each bloom is sized by its file's non-null count, at least 64, at
+  * [[UpsertTable.LookupBloomFpp]]. Integral values go in with
+  * `putLong` and strings as their UTF-8 bytes (what `putString` does),
+  * which is what [[UpsertTable.lookupFiles]] probes with, so blooms of
+  * earlier versions stay compatible. A file's values are buffered until
+  * it closes.
+  *
+  * @param dir     manifest-relative output directory of the write
+  * @param schema  table schema the footer bounds are read under
+  * @param lookups name, ordinal in the written data row, and type of
+  *                each lookup column
+  */
+private[store] final class FileEntryTracker(dir: String, schema: StructType,
+    lookups: Seq[(String, Int, DataType)], conf: SerializableConfiguration)
+    extends WriteJobStatsTracker {
+  @transient private var written: Seq[FileEntry] = Nil
+
+  /** The committed files' entries, ordered by (bucket, path). */
+  def entries: Seq[FileEntry] = written
+
+  override def newTaskInstance(): WriteTaskStatsTracker = new WriteTaskStatsTracker {
+    // the writer announces a new bucket before it closes the previous
+    // bucket's file, so each file keeps the bucket it was opened under
+    private var bucket = -1
+    private val open = mutable.HashMap.empty[String, (Int, Seq[mutable.ArrayBuffer[Any]])]
+    private val closed = mutable.ArrayBuffer.empty[FileEntry]
+
+    override def newPartition(values: InternalRow): Unit = bucket = values.getInt(0)
+
+    override def newFile(path: String): Unit =
+      open(path) = (bucket, lookups.map(_ => mutable.ArrayBuffer.empty[Any]))
+
+    override def newRow(path: String, row: InternalRow): Unit =
+      if (lookups.nonEmpty) lookups.zip(open(path)._2).foreach {
+        case ((_, i, dt), values) if !row.isNullAt(i) => values += (dt match {
+          case IntegerType => row.getInt(i).toLong
+          case LongType => row.getLong(i)
+          case _ => row.getUTF8String(i).getBytes
+        })
+        case _ => ()
+      }
+
+    override def closeFile(path: String): Unit = {
+      val (b, buffers) = open.remove(path).get
+      val blooms = lookups.zip(buffers).map { case ((c, _, _), values) =>
+        val bf = BloomFilter.create(math.max(values.size, 64).toLong,
+          UpsertTable.LookupBloomFpp)
+        values.foreach {
+          case l: Long => bf.putLong(l)
+          case bytes: Array[Byte] => bf.putBinary(bytes)
+        }
+        val bos = new java.io.ByteArrayOutputStream()
+        bf.writeTo(bos)
+        c -> java.util.Base64.getEncoder.encodeToString(bos.toByteArray)
+      }.toMap
+      closed += FileEntry(s"$dir/__bucket=$b/${new HadoopPath(path).getName}", b,
+        FileStats.collect(conf.value, path, schema).map(_._2).getOrElse(Map.empty),
+        blooms = blooms)
+    }
+
+    override def getFinalStats(taskCommitTime: Long): WriteTaskStats =
+      WrittenFiles(closed.toSeq)
+  }
+
+  override def processStats(stats: Seq[WriteTaskStats], jobCommitTime: Long): Unit =
+    written = stats.flatMap { case WrittenFiles(fs) => fs }.sortBy(f => (f.bucket, f.path))
+}
+
+private case class WrittenFiles(files: Seq[FileEntry]) extends WriteTaskStats

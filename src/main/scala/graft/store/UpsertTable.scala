@@ -2,12 +2,14 @@ package graft.store
 
 import java.nio.file.{Files, Path, Paths}
 
-import scala.jdk.CollectionConverters._
-
+import org.apache.spark.internal.io.FileCommitProtocol
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.{BasicWriteJobStatsTracker, FileFormatWriter}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 /** Native keyed upsert table — the Spark-first re-implementation of the
   * reference's Iceberg v2 upsert sink semantics
@@ -28,10 +30,11 @@ import org.apache.spark.sql.types._
   * locality). Every commit that writes data — merge, compaction,
   * clustering, rewrites, overwrite — writes through one bucketed
   * writer ([[writeFiles]]): one file per written bucket, sorted by key
-  * within it. Reads are plain vectorized parquet scans over the current
-  * snapshot's file list, planned from the manifest by
-  * [[StoreFileIndex]] (no directory listing), so Catalyst
-  * pushdown/pruning apply untouched.
+  * within it, whose write tasks return each file's manifest entry
+  * (bounds and lookup blooms included). Reads are plain vectorized
+  * parquet scans over the current snapshot's file list, planned from
+  * the manifest by [[StoreFileIndex]] (no directory listing), so
+  * Catalyst pushdown/pruning apply untouched.
   */
 class UpsertTable(spark: SparkSession, val location: String) {
   import UpsertTable._
@@ -696,7 +699,9 @@ class UpsertTable(spark: SparkSession, val location: String) {
     * `rows` to their key bucket under `numBuckets` (the current count,
     * or [[rebucket]]'s target), sorts each bucket by `order` (the keys;
     * [[cluster]]'s z-value) and writes it into the next version's
-    * attempt directory, returning the new files' manifest entries.
+    * attempt directory. It returns the new files' manifest entries as
+    * the write tasks report them ([[FileEntryTracker]]): each file's
+    * bucket, footer bounds and lookup blooms, ordered by (bucket, path).
     *
     * Sizing, the same for every commit: min(numBuckets, cores) tasks,
     * hash-routed on `__bucket`. A bucket lands in exactly one task and
@@ -711,21 +716,42 @@ class UpsertTable(spark: SparkSession, val location: String) {
     * The attempt directory is unique: a racing or crashed writer can
     * never clobber files another attempt already committed (the
     * manifest references only its own attempt's paths; losers leave
-    * orphans that never become visible).
+    * orphans that never become visible). The write runs as its own SQL
+    * execution, as `DataFrameWriter`'s does; a failed write aborts its
+    * job, which removes what its tasks wrote.
     */
   private def writeFiles(snap: Snapshot, rows: DataFrame, numBuckets: Int,
       schema: StructType, order: Seq[Column],
       maxRecordsPerFile: Option[Long] = None): Seq[FileEntry] = {
-    val outDir = s"$location/data/v${snap.version + 1}-$attemptId"
+    val dir = s"data/v${snap.version + 1}-$attemptId"
     val tasks = math.max(1,
       math.min(numBuckets, spark.sparkContext.defaultParallelism))
-    rows.withColumn("__bucket", bucketExpr(snap.keyCols, numBuckets))
+    val qe = rows.withColumn("__bucket", bucketExpr(snap.keyCols, numBuckets))
       .repartition(tasks, col("__bucket"))
       .sortWithinPartitions(col("__bucket") +: order: _*)
-      .write.partitionBy("__bucket")
-      .options(maxRecordsPerFile.map("maxRecordsPerFile" -> _.toString).toMap)
-      .mode("overwrite").parquet(outDir)
-    newFileEntries(outDir, schema, snap.lookupCols)
+      .queryExecution
+    val plan = qe.executedPlan
+    val (bucket, data) = plan.output.partition(_.name == "__bucket")
+    val lookups = effectiveLookupCols(schema, snap.lookupCols).map { c =>
+      val i = data.indexWhere(_.name == c)
+      (c, i, data(i).dataType)
+    }
+    val conf = spark.sessionState.newHadoopConf()
+    val serConf = new SerializableConfiguration(conf)
+    val tracker = new FileEntryTracker(dir, schema, lookups, serConf)
+    // Spark's own tracker sets the tasks' output metrics (rows and
+    // bytes written), which listeners read, as DataFrameWriter's does
+    val basic = new BasicWriteJobStatsTracker(serConf, BasicWriteJobStatsTracker.metrics)
+    val committer = FileCommitProtocol.instantiate(
+      spark.sessionState.conf.fileCommitProtocolClass,
+      java.util.UUID.randomUUID().toString, s"$location/$dir")
+    SQLExecution.withNewExecutionId(qe, Some("write")) {
+      FileFormatWriter.write(qe.sparkSession, plan, new ParquetFileFormat, committer,
+        FileFormatWriter.OutputSpec(s"$location/$dir", Map.empty, plan.output),
+        conf, bucket, None, Seq(basic, tracker),
+        maxRecordsPerFile.map("maxRecordsPerFile" -> _.toString).toMap)
+    }
+    tracker.entries
   }
 
   /** DDL-driven schema evolution (`ALTER TABLE … ADD COLUMN` / type
@@ -992,47 +1018,6 @@ class UpsertTable(spark: SparkSession, val location: String) {
   private def attemptId: String =
     java.util.UUID.randomUUID().toString.take(8)
 
-  private def listBucketFiles(outDir: String): Seq[(String, Int)] =
-    graft.Fs.children(Paths.get(outDir))
-      .filter(p => p.getFileName.toString.startsWith("__bucket="))
-      .flatMap { bdir =>
-        val b = bdir.getFileName.toString.stripPrefix("__bucket=").toInt
-        graft.Fs.children(bdir)
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .map(f => (s"${bdir.getFileName}/${f.getFileName}", b))
-      }
-
-  /** Manifest entries for a commit's freshly written files, with
-    * column bounds harvested from each footer (metadata-only reads,
-    * bounded by the commit's own file count) and, for declared lookup
-    * columns, a per-file Bloom filter (one single-column scan of each
-    * freshly written file — the same bounded-by-the-commit cost class
-    * as the footer reads; Iceberg pays it in the same place for its
-    * puffin blobs).
-    */
-  private def newFileEntries(outDir: String, schema: StructType,
-      declared: Seq[String]): Seq[FileEntry] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val lookups = effectiveLookupCols(schema, declared)
-    val files = listBucketFiles(outDir)
-    val footers = files.map { case (rel, _) =>
-      rel -> FileStats.collect(conf, s"$outDir/$rel", schema)
-    }.toMap
-    // each bloom is sized by its file's non-null count, read off the
-    // footer: rows minus the column's null count (all rows when the
-    // footer records no null count for it)
-    val nonNull = for {
-      (rel, Some((rows, stats))) <- footers.toSeq
-      c <- lookups
-    } yield (rel, c) -> (rows - stats.get(c).map(_.nullCount).getOrElse(0L))
-    val blooms = collectBlooms(outDir, nonNull.toMap, schema)
-    files.map { case (rel, b) =>
-      FileEntry(outDir.stripPrefix(s"$location/") + s"/$rel", b,
-        footers(rel).map(_._2).getOrElse(Map.empty),
-        blooms = blooms.getOrElse(rel, Map.empty))
-    }
-  }
-
   /** Declared lookup columns present in `schema` at a bloomable type:
     * the manifest's persisted declaration plus any session-conf
     * additions (so an existing table can start collecting without a
@@ -1044,89 +1029,6 @@ class UpsertTable(spark: SparkSession, val location: String) {
       f.name == c && (f.dataType == LongType || f.dataType == IntegerType ||
         f.dataType == StringType)))
   }
-
-  /** Base64 spark-sketch blooms over each commit file's non-null
-    * values per lookup column, for ALL of a commit's files in ONE Spark
-    * job (a partition-local bloom-build pass over the files read under
-    * the table schema, merged on the driver) — never per-file jobs,
-    * whose scheduling overhead alone would tax every commit by
-    * O(files × cols) round trips (the r8 bench caught exactly that as
-    * a 3.5× q190 regression). Each bloom is sized up front from the
-    * footer's non-null count in `nonNull`, so partial blooms of one
-    * (file, col) are equal-sized and merge. Put/probe semantics are
-    * `DataFrameStatFunctions.bloomFilter`'s (putLong for integral,
-    * putString for strings — what [[lookupFiles]] probes with), so
-    * blooms persisted by earlier versions stay compatible. Any
-    * anomaly → entries omitted (blooms are an optimization; absence
-    * always reads as "cannot prune").
-    *
-    * @param nonNull (rel-path, col) → that file's non-null count of col
-    * @return rel-path → (col → base64 bloom)
-    */
-  private def collectBlooms(outDir: String, nonNull: Map[(String, String), Long],
-      schema: StructType): Map[String, Map[String, String]] =
-    if (nonNull.isEmpty) Map.empty
-    else scala.util.Try {
-      import org.apache.spark.util.sketch.BloomFilter
-      val rels = nonNull.keys.map(_._1).toSeq.distinct.sorted
-      val cols = nonNull.keys.map(_._2).toSeq.distinct.sorted
-      val fpp = LookupBloomFpp
-      val sizes = nonNull.map { case (k, n) => k -> math.max(n, 64L) }
-      val bc = spark.sparkContext.broadcast(sizes)
-      val wide = StoreFileIndex.read(spark, rels.map(r => s"$outDir/$r"),
-          StructType(cols.map(schema(_))))
-        .select((input_file_name() +: cols.map(col)): _*)
-      // partition-local blooms, merged driver-side
-      val partial = wide.rdd.mapPartitions { it =>
-        val m = scala.collection.mutable.HashMap
-          .empty[(String, String), BloomFilter]
-        val relOf = scala.collection.mutable.HashMap.empty[String, Option[String]]
-        it.foreach { row =>
-          relOf.getOrElseUpdate(row.getString(0), commitRel(row.getString(0), rels))
-            .foreach { r =>
-              var i = 0
-              while (i < cols.size) {
-                val v = row.get(i + 1)
-                if (v != null) {
-                  val bf = m.getOrElseUpdate((r, cols(i)),
-                    BloomFilter.create(bc.value((r, cols(i))), fpp))
-                  v match {
-                    case l: java.lang.Long => bf.putLong(l)
-                    case n: java.lang.Integer => bf.putLong(n.toLong)
-                    case s: String => bf.putString(s)
-                    case other => bf.put(other)
-                  }
-                }
-                i += 1
-              }
-            }
-        }
-        m.iterator
-      }.collect()
-      val merged = scala.collection.mutable.HashMap
-        .empty[(String, String), BloomFilter]
-      partial.foreach { case (k, bf) =>
-        merged.get(k) match {
-          case Some(a) => a.mergeInPlace(bf)
-          case None => merged(k) = bf
-        }
-      }
-      // a col whose footer counts zero non-null values in a file still
-      // gets a bloom (an empty one prunes every probe); any other
-      // missing bloom (a file whose path matched no unique rel) stays
-      // missing, which reads as "cannot prune"
-      nonNull.foreach { case (k, n) =>
-        if (n == 0L && !merged.contains(k))
-          merged(k) = BloomFilter.create(sizes(k), fpp)
-      }
-      merged.toSeq.map { case ((r, c), bf) =>
-        val bos = new java.io.ByteArrayOutputStream()
-        bf.writeTo(bos)
-        (r, c, java.util.Base64.getEncoder.encodeToString(bos.toByteArray))
-      }.groupBy(_._1).map { case (r, s) =>
-        r -> s.map(t => t._2 -> t._3).toMap
-      }
-    }.getOrElse(Map.empty)
 }
 
 object UpsertTable {
@@ -1279,28 +1181,6 @@ object UpsertTable {
     case (ArrayType(ea, _), ArrayType(eb, _)) =>
       widerOf(ea, eb).map(ArrayType(_, containsNull = true))
     case _ => None
-  }
-
-  /** The commit-relative path among `rels` that the file URI `f`
-    * (as `input_file_name` reports it) names: exact segment equality
-    * on the DECODED path (URI.getPath handles any percent-encoding, not
-    * just '='), requiring a UNIQUE match — a wrong match would attach
-    * the wrong file's bloom and make lookup pruning silently unsound
-    * (false negatives), so ambiguity yields None (absence is always
-    * safe: it reads as "cannot prune").
-    */
-  private def commitRel(f: String, rels: Seq[String]): Option[String] = {
-    val fSegs = scala.util.Try(new java.net.URI(f).getPath)
-      .toOption.filter(_ != null).getOrElse(f)
-      .split('/').filter(_.nonEmpty)
-    rels.filter { r =>
-      val rSegs = r.split('/').filter(_.nonEmpty)
-      fSegs.length >= rSegs.length &&
-        fSegs.takeRight(rSegs.length).sameElements(rSegs)
-    } match {
-      case Seq(only) => Some(only)
-      case _ => None
-    }
   }
 
   def apply(spark: SparkSession, location: String): UpsertTable =
