@@ -22,6 +22,18 @@ object Fs {
     finally s.close()
   }
 
+  /** Non-directory entries under `dir` at any depth, links not followed. */
+  def files(dir: Path): Seq[Path] =
+    children(dir).flatMap(p =>
+      if (Files.isDirectory(p, LinkOption.NOFOLLOW_LINKS)) files(p) else Seq(p))
+
+  /** Remove every empty directory under `dir`, `dir` included. */
+  def pruneEmptyDirs(dir: Path): Unit =
+    if (Files.isDirectory(dir, LinkOption.NOFOLLOW_LINKS)) {
+      children(dir).foreach(pruneEmptyDirs)
+      if (children(dir).isEmpty) Files.deleteIfExists(dir)
+    }
+
   /** Recursive delete that never follows symlinks: a directory symlink
     * inside a dropped table/namespace/staging dir is removed as a link
     * entry, its target untouched (Files.isDirectory would otherwise

@@ -210,23 +210,18 @@ case class GraftMergeCommand(location: String, batch: LogicalPlan,
       store.merge(df, opCol = opCol)
     } else {
       // WHEN NOT MATCHED BY SOURCE THEN DELETE: target keys absent
-      // from the batch become delete rows in the same changelog —
-      // one key-projected target scan + left-anti join, then the
-      // ordinary keyed merge applies upserts and prunes in one commit
+      // from the batch (NULL a key value) become delete rows in the same
+      // changelog — one key-projected target scan, then the ordinary
+      // keyed merge applies upserts and prunes in one commit
       val snap = store.currentSnapshot.getOrElse(
         throw new IllegalStateException(s"table does not exist: $location"))
-      val keys = snap.keyCols
       val op = opCol.getOrElse("__merge_op")
       val upserts =
         if (opCol.isDefined) df else df.withColumn(op, lit("u"))
-      val victims = store.readSnapshot(snap).select(keys.map(col): _*)
-        .join(df.select(keys.map(col): _*), keys, "left_anti")
-      val fields = snap.schema.fields.toSeq
-      val dels = victims.select(fields.map { f =>
-        if (keys.contains(f.name)) col(f.name)
-        else lit(null).cast(f.dataType).as(f.name)
-      }: _*).withColumn(op, lit("d"))
-      store.merge(upserts.unionByName(dels), opCol = Some(op))
+      val dels = UpsertTable.withoutKeys(store.readSnapshot(snap)
+        .select(snap.keyCols.map(col): _*), df, snap.keyCols)
+      store.merge(upserts.unionByName(dels.withColumn(op, lit("d")),
+        allowMissingColumns = true), opCol = Some(op))
     }
     Seq.empty
   }

@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions._
 
 /** Guarded JDBC upsert sink (the q152 serving-tier path, shared with
   * the crash/restart spec): each micro-batch is changelog-normalized
-  * to its per-key latest (max_by partial agg — one row per key ever
-  * reaches the database) and conditionally upserted under a strictly
-  * monotonic (ts, event_id) guard. The guard is what makes the sink
+  * to its per-key latest through ChangelogNormalize (one row per key
+  * ever reaches the database) and conditionally upserted under a
+  * strictly monotonic (ts, event_id) guard. The guard is what makes the sink
   * safe under the two failure modes a real deployment hits:
   * out-of-order batches (an older row can never overwrite a newer
   * one) and replayed batches after a crash (re-applying any prefix of
@@ -35,11 +35,10 @@ object JdbcUpsert {
 
   /** Apply one micro-batch of (event_id, ts, user_id, cents) rows. */
   def applyBatch(url: String, table: String, b: DataFrame): Unit = {
-    val latest = b.groupBy("user_id")
-      .agg(max_by(struct(col("ts"), col("event_id"), col("cents")),
-        struct(col("ts"), col("event_id"))).as("r"))
-      .select(col("user_id"), col("r.ts").as("ts"),
-        col("r.event_id").as("event_id"), col("r.cents").as("cents"))
+    val latest = graft.store.ChangelogNormalize.latestByKey(
+      b.select(col("user_id"), col("ts"), col("event_id"), col("cents"),
+        struct(col("ts"), col("event_id")).as("__ord")),
+      Seq("user_id"), "__ord")
     latest.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
       if (rows.hasNext) {
         val c = DriverManager.getConnection(url)

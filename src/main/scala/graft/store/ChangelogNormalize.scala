@@ -14,6 +14,10 @@ import org.apache.spark.sql.functions._
   * bounded by distinct keys per partition and hot keys reduce in
   * parallel. Ties on `ord` are broken arbitrarily (callers pass a
   * total order — offset/LSN — exactly like the window formulation).
+  *
+  * The one latest-per-key, NULL a key value: [[UpsertTable.merge]]'s
+  * batch and delta normalize, [[IncrementalAgg.netChanges]],
+  * [[IncrementalJoin]]'s net facts, [[graft.cdc.JdbcUpsert]].
   */
 object ChangelogNormalize {
 
@@ -34,13 +38,10 @@ object ChangelogNormalize {
         "ChangelogNormalize: column name __cnt is reserved by the " +
           "normalize aggregation — rename the data column")
     val payload = struct(df.columns.toSeq.filterNot(_ == ordCol).map(col): _*)
-    val grouped = df.groupBy(keys.map(col): _*)
-    if (withCount)
-      grouped.agg(max_by(payload, col(ordCol)).as("__row"),
-          count(lit(1)).as("__cnt"))
-        .select(col("__row.*"), col("__cnt"))
-    else
-      grouped.agg(max_by(payload, col(ordCol)).as("__row"))
-        .select("__row.*")
+    val cnt = if (withCount) Seq("__cnt") else Nil
+    df.groupBy(keys.map(col): _*)
+      .agg(max_by(payload, col(ordCol)).as("__row"),
+        cnt.map(c => count(lit(1)).as(c)): _*)
+      .select(col("__row.*") +: cnt.map(col): _*)
   }
 }

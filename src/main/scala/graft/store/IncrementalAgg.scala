@@ -26,27 +26,14 @@ import org.apache.spark.sql.functions._
   */
 object IncrementalAgg {
 
-  /** Refresh `target` (keyed by `groupCol`, columns `n` + `sv`) with
-    * the source changes in `(fromV, toV]`. `valueCol` must be numeric;
-    * deletes retract the key's prior contribution.
-    *
-    * FP caveat: for non-integer measures, incremental add/subtract
-    * accumulates rounding drift relative to a from-scratch sum (as in
-    * any retraction-based maintenance); integer-valued measures are
-    * exact under any order. Schedule a periodic full recompute
-    * ([[fullCountSum]]) when exact float sums matter.
-    */
   /** Step 1: the feed's last image per key in `(fromV, toV]` (max
     * _commit_version wins; within one commit a key appears once —
     * merge normalized it). Exposed for plan-shape assertions. */
   private[graft] def netChanges(changes: DataFrame, keyCol: String,
       groupCol: String, valueCol: String): DataFrame =
-    changes
-      .groupBy(col(keyCol))
-      .agg(max_by(
-        struct(col(groupCol), col(valueCol), col("_change_op")),
-        col("_commit_version")).as("__last"))
-      .select(col(keyCol), col("__last.*"))
+    ChangelogNormalize.latestByKey(
+      changes.select(keyCol, groupCol, valueCol, "_change_op", "_commit_version"),
+      Seq(keyCol), "_commit_version")
 
   /** Steps 2-3: group-level deltas from the net changes — prior
     * contributions come from a time-travel read of the source AT
@@ -74,6 +61,16 @@ object IncrementalAgg {
       .agg(sum(col("__dn")).as("__dn"), sum(col("__dv")).as("__dv"))
   }
 
+  /** Refresh `target` (keyed by `groupCol`, columns `n` + `sv`) with
+    * the source changes in `(fromV, toV]`. `valueCol` must be numeric;
+    * deletes retract the key's prior contribution.
+    *
+    * FP caveat: for non-integer measures, incremental add/subtract
+    * accumulates rounding drift relative to a from-scratch sum (as in
+    * any retraction-based maintenance); integer-valued measures are
+    * exact under any order. Schedule a periodic full recompute
+    * ([[fullCountSum]]) when exact float sums matter.
+    */
   def refreshCountSum(spark: SparkSession, source: UpsertTable,
       target: UpsertTable, fromV: Long, toV: Long,
       keyCol: String, groupCol: String, valueCol: String): Unit = {

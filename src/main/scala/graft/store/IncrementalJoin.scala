@@ -77,29 +77,19 @@ object IncrementalJoin {
     // one commit a key appears once — merge normalized it)
     val netA: DataFrame =
       if (fromA == toA) null
-      else {
-        val ch = a.readChanges(fromA, toA)
-        val dataCols = ch.columns
-          .filterNot(c => c == aKey || c == "_commit_version").map(col)
-        ch.groupBy(col(aKey))
-          .agg(max_by(struct(dataCols: _*), col("_commit_version"))
-            .as("__last"))
-          .select(col(aKey), col("__last.*"))
-          .cache() // feeds legs 2 AND 3's anti-join
-      }
+      else ChangelogNormalize.latestByKey(a.readChanges(fromA, toA),
+          Seq(aKey), "_commit_version")
+        .cache() // feeds legs 2 AND 3's anti-join
     try {
       val legs = scala.collection.mutable.ListBuffer.empty[DataFrame]
       if (netA != null) {
         // 2. fact upserts re-joined to the current dimension; fact
-        // deletes delete the target row (attrs null-filled to align)
+        // deletes delete the target row (attrs null-filled by the union)
         legs += joinDim(netA.where(col("_change_op") =!= "d")
           .drop("_change_op"))
           .withColumn("__op", lit("u"))
         legs += netA.where(col("_change_op") === "d")
-          .drop("_change_op")
-          .select(col(aKey) +: (a.read().columns.filterNot(_ == aKey)
-            .map(c => lit(null).as(c)) ++
-            bAttrs.map(c => lit(null).as(c)) :+ lit("d").as("__op")): _*)
+          .select(col(aKey), lit("d").as("__op"))
       }
       if (fromB != toB) {
         // 3. reverse fan-out: current fact rows referencing a changed
@@ -110,13 +100,12 @@ object IncrementalJoin {
         var affected = aCur
           .join(changedDim, aCur(fkCol) === changedDim(bKey), "left_semi")
         if (netA != null)
-          affected = affected
-            .join(netA.select(aKey), Seq(aKey), "left_anti")
+          affected = UpsertTable.withoutKeys(affected, netA, Seq(aKey))
         legs += joinDim(affected).withColumn("__op", lit("u"))
       }
       if (legs.nonEmpty)
-        target.merge(legs.reduce(_ unionByName _), opCol = Some("__op"),
-          streamId = streamId, batchId = batchId,
+        target.merge(legs.reduce(_.unionByName(_, allowMissingColumns = true)),
+          opCol = Some("__op"), streamId = streamId, batchId = batchId,
           autoCreateKeys = Seq(aKey))
       else if (target.currentSnapshot.isEmpty) {
         // both ranges empty on a fresh target: bootstrap the (empty)

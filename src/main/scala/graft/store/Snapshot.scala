@@ -118,8 +118,15 @@ object SnapshotLog {
         s.stripPrefix("v").stripSuffix(".json").toLong }
       .sorted
 
+  private def manifest(tableRoot: String, version: Long): Path =
+    snapshotsDir(tableRoot).resolve(f"v$version%08d.json")
+
+  /** Whether `version` is committed and unexpired: one file check. */
+  def exists(tableRoot: String, version: Long): Boolean =
+    Files.exists(manifest(tableRoot, version))
+
   def read(tableRoot: String, version: Long): Snapshot = {
-    val bytes = Files.readAllBytes(snapshotsDir(tableRoot).resolve(f"v$version%08d.json"))
+    val bytes = Files.readAllBytes(manifest(tableRoot, version))
     val s = mapper.readValue(bytes, classOf[Snapshot])
     // Long erases to Object in the Map's generic signature, so Jackson
     // materializes small values as Integer — normalize. Manifests
@@ -142,7 +149,7 @@ object SnapshotLog {
   def commit(tableRoot: String, s: Snapshot): Unit = {
     val dir = snapshotsDir(tableRoot)
     Files.createDirectories(dir)
-    val target = dir.resolve(f"v${s.version}%08d.json")
+    val target = manifest(tableRoot, s.version)
     val tmp = Files.createTempFile(dir, s".v${s.version}", ".tmp")
     Files.write(tmp, mapper.writeValueAsString(s).getBytes(StandardCharsets.UTF_8))
     // optimistic concurrency: hard-link creation is atomic-exclusive
@@ -159,7 +166,7 @@ object SnapshotLog {
   }
 
   def delete(tableRoot: String, version: Long): Unit =
-    Files.deleteIfExists(snapshotsDir(tableRoot).resolve(f"v$version%08d.json"))
+    Files.deleteIfExists(manifest(tableRoot, version))
 }
 
 /** A named snapshot ref — the Iceberg branch/tag analog. `kind` is

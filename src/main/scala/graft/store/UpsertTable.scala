@@ -193,9 +193,8 @@ class UpsertTable(spark: SparkSession, val location: String) {
     require(fromVersionExclusive < toVersionInclusive,
       s"need fromVersionExclusive < toVersionInclusive, got " +
         s"($fromVersionExclusive, $toVersionInclusive]")
-    val present = SnapshotLog.listVersions(location).toSet
     val wanted = (fromVersionExclusive + 1) to toVersionInclusive
-    val missing = wanted.filterNot(present)
+    val missing = wanted.filterNot(SnapshotLog.exists(location, _))
     require(missing.isEmpty,
       s"change feed over ($fromVersionExclusive, $toVersionInclusive] " +
         s"unservable: version(s) ${missing.mkString(",")} expired")
@@ -347,20 +346,14 @@ class UpsertTable(spark: SparkSession, val location: String) {
 
   /** Current-state view over a file subset: base files verbatim when
     * no deltas are present (the zero-overhead fast path — a single
-    * vectorized scan); otherwise the latest delta row per key (by
-    * `__seq`, the committing version) replaces that key's base row,
-    * and `d` tombstones drop.
-    *
-    * The overlay is declarative, so Catalyst plans it like any query:
-    * the deltas alone are normalized (a `max_by` partial aggregation
-    * bounded by distinct changed keys, see [[ChangelogNormalize]]);
-    * the base is `left_anti`-joined on the changed keys, with no
-    * shuffle or sort of base rows, and unioned with the surviving
-    * latest delta rows. Sound because a key lives in at most one base
-    * file ([[FileEntry]]) and every delta outranks base. Keys compare
-    * null-safely, so a null key overlays as it groups. This is the
-    * read tax merge-on-read trades for O(batch) commits; [[compact]]
-    * pays it down.
+    * vectorized scan); otherwise the file reads feed [[overlay]]: the
+    * deltas alone are normalized to their latest row per key by
+    * `__seq`, the committing version (a `max_by` partial aggregation
+    * bounded by distinct changed keys, see [[ChangelogNormalize]]),
+    * and overlaid on the base rows. Sound because a key lives in at
+    * most one base file ([[FileEntry]]) and every delta outranks base.
+    * This is the read tax merge-on-read trades for O(batch) commits;
+    * [[compact]] pays it down.
     */
   private def mergedView(files: Seq[FileEntry], schema: StructType,
       keys: Seq[String]): DataFrame = {
@@ -369,14 +362,18 @@ class UpsertTable(spark: SparkSession, val location: String) {
     if (deltas.isEmpty) return base
     val deltaSchema = StructType(schema.fields ++ Seq(
       StructField(OpCol, StringType), StructField(SeqCol, LongType)))
-    val latest = ChangelogNormalize.latestByKey(
-      readFiles(deltas, deltaSchema), keys, SeqCol)
-    val changed = latest.select(keys.map(k => col(k).as(s"__changed_$k")): _*)
-    base.join(changed,
-        keys.map(k => col(k) <=> col(s"__changed_$k")).reduce(_ && _), "left_anti")
-      .unionByName(latest.where(col(OpCol) =!= "d")
-        .select(schema.fieldNames.map(col).toSeq: _*))
+    overlay(base, ChangelogNormalize.latestByKey(
+      readFiles(deltas, deltaSchema), keys, SeqCol), schema, keys)
   }
+
+  /** The only fold of changes into stored rows (reads, [[compact]], the
+    * merge-on-write rewrite): `latest` (one row per key, with [[OpCol]])
+    * replaces its key's `base` row, `d` tombstones drop, base rows never
+    * shuffle ([[withoutKeys]]), and NULL is a key value, as in `groupBy`. */
+  private def overlay(base: DataFrame, latest: DataFrame, schema: StructType,
+      keys: Seq[String]): DataFrame =
+    withoutKeys(base, latest, keys).unionByName(latest
+      .where(col(OpCol) =!= "d").select(schema.fieldNames.map(col).toSeq: _*))
 
   private def readFiles(files: Seq[FileEntry], schema: StructType): DataFrame =
     StoreFileIndex.read(spark, files.map(f => s"$location/${f.path}"), schema)
@@ -416,8 +413,8 @@ class UpsertTable(spark: SparkSession, val location: String) {
     * The commit kind is decided before any touch set: a delta commit
     * writes the batch straight through [[writeFiles]] and computes
     * none; a rewriting commit collects the touched buckets under each
-    * live spec to choose the files it rewrites, then writes through
-    * the same writer.
+    * live spec to choose the files it rewrites, folds the batch over
+    * them through [[overlay]] and writes through the same writer.
     */
   def merge(
       batch: DataFrame,
@@ -527,16 +524,12 @@ class UpsertTable(spark: SparkSession, val location: String) {
       // current-state view of the rewritten buckets under the OLD
       // manifest schema (every live file is promotable-readable under
       // it by invariant; pending deltas in these buckets are overlaid
-      // and absorbed by this rewrite), then align-cast to the evolved
-      // schema
-      val oldDf = align(mergedView(oldAffected, oldSchema, snap.keyCols), newSchema)
-
-      // keys present in the batch replace (or delete) stored rows
-      val batchKeys = normalized.select(snap.keyCols.map(col): _*)
-      val survivors = oldDf.join(batchKeys, snap.keyCols, "left_anti")
-      val upserts = normalized.where(col("__op") =!= "d").select(dataCols.map(col): _*)
-
-      val newFiles = writeFiles(snap, survivors.unionByName(upserts),
+      // and absorbed by this rewrite), align-cast to the evolved
+      // schema; the batch folds over it as every read's deltas do
+      val rewritten = overlay(
+        align(mergedView(oldAffected, oldSchema, snap.keyCols), newSchema),
+        normalized, newSchema, snap.keyCols)
+      val newFiles = writeFiles(snap, rewritten,
         snap.numBuckets, newSchema, snap.keyCols.map(col))
       publish(snap.version, "merge", snap.copy(
         schemaJson = newSchema.json,
@@ -852,7 +845,7 @@ class UpsertTable(spark: SparkSession, val location: String) {
     val cur = snapshotOrFail
     require(toVersion < cur.version,
       s"rollback target v$toVersion is not before current v${cur.version}")
-    require(SnapshotLog.listVersions(location).contains(toVersion),
+    require(SnapshotLog.exists(location, toVersion),
       s"rollback target v$toVersion does not exist (expired?) for $location")
     val target = SnapshotLog.read(location, toVersion)
     val missing = target.files.filterNot(f => Files.exists(root.resolve(f.path)))
@@ -865,19 +858,20 @@ class UpsertTable(spark: SparkSession, val location: String) {
   /** Orphan-file GC (the `remove_orphan_files` half of warehouse
     * maintenance, next to [[expireSnapshots]]): delete data files on
     * disk that NO snapshot in the log references — the leftovers of
-    * commit attempts that lost the atomic-exclusive publish race or
-    * crashed between writing data and publishing the manifest. Only
-    * files older than `olderThanMs` are touched: an in-flight
-    * attempt's freshly written files must survive until its publish
-    * or loss is decided, so the retention has to exceed the LONGEST
-    * plausible commit write. The default is 3 days — Iceberg's
-    * `remove_orphan_files` default, chosen for exactly this hazard —
-    * and retentions under 24 h are refused unless
-    * `allowShortRetention = true` is passed explicitly (at 100 TB a
-    * multi-hour data write is routine; GC'ing its files mid-commit
-    * corrupts the snapshot it is about to publish). Empty
-    * attempt/bucket directories are pruned. Returns the deleted
-    * manifest-relative paths.
+    * commit attempts that lost the atomic-exclusive publish race,
+    * crashed before publishing or were killed mid-write (leaving a
+    * `_temporary/` tree). Only files older than `olderThanMs` are
+    * touched: an in-flight attempt's freshly written files must
+    * survive until its publish or loss is decided, so the retention
+    * has to exceed the LONGEST plausible commit write. The default is
+    * 3 days — Iceberg's `remove_orphan_files` default, chosen for
+    * exactly this hazard — and retentions under 24 h are refused
+    * unless `allowShortRetention = true` is passed explicitly (at
+    * 100 TB a multi-hour data write is routine; GC'ing its files
+    * mid-commit corrupts the snapshot it is about to publish). A
+    * `.crc` sidecar goes with its file, an attempt's `_SUCCESS` marker
+    * with its last referenced file, and empty directories are pruned.
+    * Returns the deleted manifest-relative `.parquet` paths.
     */
   def removeOrphanFiles(olderThanMs: Long = OrphanGcDefaultMs,
       allowShortRetention: Boolean = false): Seq[String] =
@@ -889,24 +883,23 @@ class UpsertTable(spark: SparkSession, val location: String) {
           "override (tests/teardown only)")
       val live: Set[String] = SnapshotLog.listVersions(location)
         .flatMap(v => SnapshotLog.read(location, v).files.map(_.path)).toSet
-      val dataRoot = root.resolve("data")
       val cutoff = System.currentTimeMillis() - olderThanMs
-      val deleted = scala.collection.mutable.ListBuffer.empty[String]
-      graft.Fs.children(dataRoot).foreach { cdir =>
-        graft.Fs.children(cdir).filter(Files.isDirectory(_)).foreach { bdir =>
-          graft.Fs.children(bdir).foreach { f =>
-            val rel = root.relativize(f).toString
-            if (f.getFileName.toString.endsWith(".parquet") && !live(rel) &&
-                Files.getLastModifiedTime(f).toMillis < cutoff) {
-              Files.deleteIfExists(f)
-              deleted += rel
-            }
-          }
-          if (graft.Fs.children(bdir).isEmpty) Files.deleteIfExists(bdir)
+      def rel(f: Path): String = root.relativize(f).toString
+      def old(f: Path): Boolean = Files.getLastModifiedTime(f).toMillis < cutoff
+      graft.Fs.children(root.resolve("data")).flatMap { attempt =>
+        val files = graft.Fs.files(attempt)
+        val holdsLive = files.exists(f => live(rel(f)))
+        val kept = files.filter(f => live(rel(f)) || !old(f) ||
+          (holdsLive && f.getFileName.toString == "_SUCCESS")).toSet
+        val gone = files.filterNot { f =>
+          val n = f.getFileName.toString
+          kept(f) || (n.startsWith(".") && n.endsWith(".crc") &&
+            kept(f.resolveSibling(n.drop(1).dropRight(4))))
         }
-        if (graft.Fs.children(cdir).isEmpty) Files.deleteIfExists(cdir)
-      }
-      deleted.toList.sorted
+        gone.foreach(Files.deleteIfExists)
+        graft.Fs.pruneEmptyDirs(attempt)
+        gone.map(rel).filter(_.endsWith(".parquet"))
+      }.sorted
     }
 
   // ---- Named refs: Iceberg-style tags + the WAP publish branch ----
@@ -933,7 +926,7 @@ class UpsertTable(spark: SparkSession, val location: String) {
     require(!mustBeNew || RefLog.read(location, name).isEmpty,
       s"ref '$name' already exists for $location")
     val v = version.getOrElse(snapshotOrFail.version)
-    require(SnapshotLog.listVersions(location).contains(v),
+    require(SnapshotLog.exists(location, v),
       s"ref '$name' target v$v does not exist for $location")
     RefLog.write(location, TableRef(name, kind, v))
   }
@@ -966,7 +959,7 @@ class UpsertTable(spark: SparkSession, val location: String) {
       require(to >= ref.version,
         s"fast-forward of '$name' to v$to would move backward " +
           s"from v${ref.version}")
-      require(SnapshotLog.listVersions(location).contains(to),
+      require(SnapshotLog.exists(location, to),
         s"fast-forward target v$to does not exist for $location")
       RefLog.write(location, ref.copy(version = to))
     }
@@ -989,17 +982,15 @@ class UpsertTable(spark: SparkSession, val location: String) {
     if (versions.size <= 1) return
     val cutoff = System.currentTimeMillis() - retentionMs
     val pinned = RefLog.list(location).map(_.version).toSet
-    val (latest, older) = (versions.last, versions.init)
-    val expired = older.filter(v => !pinned(v) &&
-      SnapshotLog.read(location, v).timestampMs < cutoff)
+    val (expired, kept) = versions.init.map(SnapshotLog.read(location, _))
+      .partition(s => !pinned(s.version) && s.timestampMs < cutoff)
     if (expired.isEmpty) return
-    val live = (versions.diff(expired)).map(SnapshotLog.read(location, _))
-    val liveFiles = live.flatMap(_.files.map(_.path)).toSet
-    expired.foreach { v =>
-      SnapshotLog.read(location, v).files
-        .filterNot(f => liveFiles(f.path))
+    val liveFiles = (kept :+ SnapshotLog.read(location, versions.last))
+      .flatMap(_.files.map(_.path)).toSet
+    expired.foreach { s =>
+      s.files.filterNot(f => liveFiles(f.path))
         .foreach(f => Files.deleteIfExists(root.resolve(f.path)))
-      SnapshotLog.delete(location, v)
+      SnapshotLog.delete(location, s.version)
     }
   }
 
@@ -1079,6 +1070,14 @@ object UpsertTable {
 
   def bucketExpr(keys: Seq[String], numBuckets: Int): Column =
     pmod(hash(keys.map(col): _*), lit(numBuckets))
+
+  /** `rows` without those whose key is in `changed`, compared
+    * null-safely as `groupBy` groups: the overlay's comparison, shared
+    * by every anti-join on a store's primary key. */
+  private[graft] def withoutKeys(rows: DataFrame, changed: DataFrame,
+      keys: Seq[String]): DataFrame =
+    rows.join(changed.select(keys.map(k => col(k).as(s"__changed_$k")): _*),
+      keys.map(k => col(k) <=> col(s"__changed_$k")).reduce(_ && _), "left_anti")
 
   /** Per-row 60-bit content hash over the given columns in NAME order
     * (sorted, so projection order can't change the fingerprint) —

@@ -322,6 +322,36 @@ class GraftCatalogSpec extends AnyFunSuite {
     assert(e.getMessage.contains("key column"))
   }
 
+  test("a NULL key is one key for INSERT, UPDATE, DELETE and MERGE") {
+    warehouse
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_t.cdc")
+    spark.sql("CREATE TABLE IF NOT EXISTS graft_t.cdc.t_nullk (k INT, v STRING) " +
+      "TBLPROPERTIES('keys'='k')")
+    def rows(): Seq[(Option[Int], String)] =
+      spark.sql("SELECT k, v FROM graft_t.cdc.t_nullk ORDER BY k NULLS FIRST")
+        .collect().map(r => (Option(r.getAs[Integer](0)).map(_.toInt), r.getString(1)))
+        .toSeq
+    spark.sql("INSERT INTO graft_t.cdc.t_nullk VALUES (NULL, 'a'), (1, 'x')")
+    spark.sql("INSERT INTO graft_t.cdc.t_nullk VALUES (NULL, 'b')")
+    assert(rows() === Seq((None, "b"), (Some(1), "x")))
+    spark.sql("UPDATE graft_t.cdc.t_nullk SET v = 'z' WHERE k IS NULL")
+    assert(rows() === Seq((None, "z"), (Some(1), "x")))
+    spark.sql("DELETE FROM graft_t.cdc.t_nullk WHERE k IS NULL")
+    assert(rows() === Seq((Some(1), "x")))
+
+    // full-sync MERGE with a NULL key on both sides: the NULL-keyed
+    // target row is the source's, so it is replaced, not deleted
+    spark.sql("INSERT INTO graft_t.cdc.t_nullk VALUES (NULL, 'n'), (2, 'y')")
+    Seq((None, "m"), (Some(3), "w")).toDF("k", "v")
+      .createOrReplaceTempView("nullk_src")
+    spark.sql(
+      """MERGE INTO graft_t.cdc.t_nullk t USING nullk_src s ON t.k = s.k
+        |WHEN MATCHED THEN UPDATE SET *
+        |WHEN NOT MATCHED THEN INSERT *
+        |WHEN NOT MATCHED BY SOURCE THEN DELETE""".stripMargin)
+    assert(rows() === Seq((None, "m"), (Some(3), "w")))
+  }
+
   test("DROP TABLE and missing-table errors") {
     warehouse
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graft_t.tmp")

@@ -31,6 +31,17 @@ class CommitWriterSpec extends AnyFunSuite {
     t.merge((1L to 50000L).map(i => (i, i)).toDF("id", "v"))
     assert(t.currentSnapshot.get.lookupCols.isEmpty)
     var model = (1L to 50000L).map(i => i -> i).toMap
+    // a merge-on-write commit folds the batch through the read overlay:
+    // its touch-set collect and its write, and no job more
+    locally {
+      val batch = (1L to 500L).map(i => (i * 89, -i, i))
+      val jobs = TestSpark.jobsDuring {
+        t.merge(batch.toDF("id", "v", "ord"), orderCol = Some("ord"))
+      }
+      model ++= batch.map(r => r._1 -> r._2)
+      assert(jobs.count(_.contains("collect at UpsertTable")) === 1, jobs.mkString(" | "))
+      assert(jobs.size === 7, jobs.mkString(" | "))
+    }
     (1 to 3).foreach { round =>
       val batch = (1L to 500L).map(i => (i * 97 + round, round * 1000L + i, i))
       val jobs = TestSpark.jobsDuring {

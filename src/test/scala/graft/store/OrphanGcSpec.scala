@@ -3,6 +3,8 @@ package graft.store
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.nio.file.attribute.FileTime
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -62,6 +64,80 @@ class OrphanGcSpec extends AnyFunSuite {
     // dropping the retention collects the fresh orphan too
     assert(t.removeOrphanFiles(olderThanMs = -1L,
       allowShortRetention = true) === Seq(fresh))
+    assert(t.read().orderBy("user_id").collect().toSeq === before)
+  }
+
+  test("a dead attempt goes whole: sidecars, markers and a killed writer's _temporary tree") {
+    val t = UpsertTable(spark,
+      Files.createTempDirectory("graft-gc-walk").toString)
+    t.merge((1 to 40).map(i => (i, s"e$i")).toDF("user_id", "email"),
+      autoCreateKeys = Seq("user_id"))
+    t.merge(Seq((2, "b2")).toDF("user_id", "email"))
+    // expiry deletes the replaced bucket's data files, not their
+    // sidecars, nor the markers of an attempt it empties
+    t.expireSnapshots(retentionMs = -1L)
+    val before = t.read().orderBy("user_id").collect().toSeq
+    val root = Paths.get(t.location)
+    val data = root.resolve("data")
+    def files(dir: java.nio.file.Path): Seq[java.nio.file.Path] = {
+      val s = Files.walk(dir)
+      try s.iterator().asScala.filter(Files.isRegularFile(_)).toList
+      finally s.close()
+    }
+    def aged(dir: java.nio.file.Path): Unit = files(dir).foreach(f =>
+      Files.setLastModifiedTime(f,
+        FileTime.fromMillis(System.currentTimeMillis() - 7200 * 1000L)))
+
+    // a lost attempt: a copy of a real attempt directory as the writer
+    // left it, checksum sidecars and _SUCCESS marker included
+    val real = data.resolve(
+      Paths.get(t.currentSnapshot.get.files.head.path).getName(1))
+    assert(Files.exists(real.resolve("_SUCCESS")) &&
+      Files.exists(real.resolve("._SUCCESS.crc")))
+    val lost = data.resolve("v99-0c0b1ed0")
+    files(real).foreach { f =>
+      val to = lost.resolve(real.relativize(f))
+      Files.createDirectories(to.getParent)
+      Files.copy(f, to)
+    }
+    aged(lost)
+    // a killed writer: task output never moved out of _temporary/
+    val part = files(real).find(_.toString.endsWith(".parquet")).get
+    val task = data.resolve("v98-de4dbeef/_temporary/0/" +
+      "task_202610190000_0001_m_000000/__bucket=0")
+    Files.createDirectories(task)
+    Files.copy(part, task.resolve(part.getFileName))
+    Files.copy(part.resolveSibling(s".${part.getFileName}.crc"),
+      task.resolve(s".${part.getFileName}.crc"))
+    aged(data.resolve("v98-de4dbeef"))
+    val planted = (files(lost) ++ files(task))
+      .map(root.relativize(_).toString).filter(_.endsWith(".parquet")).sorted
+
+    assert(t.removeOrphanFiles(olderThanMs = 3600 * 1000L,
+      allowShortRetention = true) === planted)
+    assert(!Files.exists(lost) && !Files.exists(data.resolve("v98-de4dbeef")))
+    // past every cutoff, what expiry left goes too; no parquet file is
+    // unreferenced any more
+    assert(t.removeOrphanFiles(olderThanMs = -1L,
+      allowShortRetention = true).isEmpty)
+
+    val referenced = SnapshotLog.listVersions(t.location).flatMap(v =>
+      SnapshotLog.read(t.location, v).files.map(f => root.resolve(f.path))).toSet
+    val liveAttempts = referenced.map(f => data.resolve(data.relativize(f).getName(0)))
+    def sidecarOf(f: java.nio.file.Path): Option[java.nio.file.Path] = {
+      val n = f.getFileName.toString
+      if (n.startsWith(".") && n.endsWith(".crc"))
+        Some(f.resolveSibling(n.drop(1).dropRight(4)))
+      else None
+    }
+    def marker(f: java.nio.file.Path): Boolean =
+      f.getFileName.toString == "_SUCCESS" && liveAttempts(f.getParent)
+    files(data).foreach { f =>
+      assert(referenced(f) || marker(f) ||
+        sidecarOf(f).exists(p => referenced(p) || marker(p)),
+        s"left behind: ${root.relativize(f)}")
+    }
+    referenced.foreach(f => assert(Files.exists(f), f))
     assert(t.read().orderBy("user_id").collect().toSeq === before)
   }
 
