@@ -26,7 +26,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     extensions.injectPostHocResolutionRule(graft.catalog.GraftMergeRule)
     // after GraftMergeRule (which consumes MERGE/DELETE/UPDATE targets):
     // overlay reads of delta-bearing store tables with the
-    // merge-on-read plan; delta-free tables keep the pure DSv2 scan
+    // merge-on-read plan; delta-free tables keep the pure DSv2 scan.
+    // Both pick their files in one planner, graft.store.StoreFileIndex
     extensions.injectPostHocResolutionRule(graft.catalog.GraftDeltaReadRule)
     // SQL TVF over the change feed: SELECT * FROM
     // table_changes('cat.ns.t', fromV [, toV]) — the Delta-parity

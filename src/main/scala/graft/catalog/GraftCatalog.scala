@@ -9,10 +9,10 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, WriteBuilder}
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
-import org.apache.spark.sql.sources.{EqualTo, Filter, InsertableRelation}
+import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScan, ParquetScanBuilder}
+import org.apache.spark.sql.sources.InsertableRelation
 import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -260,12 +260,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
   *
   * Isolation: a query reads exactly `snapshot`, resolved once when the
   * catalog loaded the table (current, `VERSION AS OF` or `TIMESTAMP AS
-  * OF`). Schema, key pruning, the scan's files and [[GraftDeltaReadRule]]'s
-  * overlay all derive from it, so a commit landing after analysis is
-  * never seen. Both read its files through a
-  * [[graft.store.StoreFileIndex]] built from the manifest's file list:
-  * no directory is listed and planning launches no Spark job. Writes
-  * re-resolve inside [[UpsertTable.merge]].
+  * OF`). Schema, the scan's files and [[GraftDeltaReadRule]]'s overlay
+  * all derive from it, so a commit landing after analysis is never
+  * seen. Both read its files through a [[graft.store.StoreFileIndex]]
+  * built from the manifest's file list, which also picks the files a
+  * scan's pushed predicates can match: no directory is listed and
+  * planning launches no Spark job. Writes re-resolve inside
+  * [[UpsertTable.merge]].
   */
 private[catalog] class GraftSqlTable(ident: Identifier,
     private[catalog] val store: UpsertTable,
@@ -280,36 +281,19 @@ private[catalog] class GraftSqlTable(ident: Identifier,
   override def properties(): util.Map[String, String] =
     Map("keys" -> snapshot.keyCols.mkString(",")).asJava
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder
-      with SupportsPushDownRequiredColumns with SupportsPushDownFilters {
-      private val dataSchema: StructType = schema()
-      private var required: StructType = dataSchema
-      private var filters: Array[Filter] = Array.empty
-      override def pruneColumns(requiredSchema: StructType): Unit =
-        required = requiredSchema
-      override def pushFilters(fs: Array[Filter]): Array[Filter] = {
-        // kept whole: equality-on-full-key predicates drive BUCKET
-        // PRUNING at build time, and all filters are handed to the
-        // parquet scan for row-group/page skipping; everything is also
-        // returned as residual — Spark re-applies above the scan (the
-        // standard file-source contract: parquet stats are advisory)
-        filters = fs
-        fs
-      }
-      // key-equality filters are fully answered by bucket pruning +
-      // parquet stats; report them so EXPLAIN shows the point lookup
-      override def pushedFilters(): Array[Filter] =
-        pruneKeys.map(m => m.map { case (k, v) => EqualTo(k, v): Filter }.toArray)
-          .getOrElse(Array.empty)
-      private def pruneKeys: Option[Map[String, Any]] = {
-        val keyEq = filters.collect { case EqualTo(a, v) => a -> v }.toMap
-        if (snapshot.keyCols.forall(keyEq.contains))
-          Some(keyEq.filter { case (k, _) => snapshot.keyCols.contains(k) })
-        else None
-      }
-      override def build(): Scan = {
-        val spark = SparkSession.active
+  /** Spark's own parquet scan builder over the snapshot's
+    * [[StoreFileIndex]]: Spark pushes the query's predicates into it as
+    * into any file source, the index picks the files they can match
+    * (key bucket, manifest bounds, lookup blooms) and the parquet reader
+    * skips row groups inside them. The scan is built over the narrowed
+    * index, so its `inputFiles` and size estimate count the files it
+    * reads.
+    */
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+    val spark = SparkSession.active
+    val index = StoreFileIndex(spark, store.location, snapshot, snapshot.files)
+    new ParquetScanBuilder(spark, index, schema(), schema(), options) {
+      override def build(): ParquetScan = {
         // a raw file scan cannot apply the merge-on-read overlay —
         // GraftDeltaReadRule replaces delta-bearing relations before
         // any scan is built, so reaching here with deltas means the
@@ -318,36 +302,8 @@ private[catalog] class GraftSqlTable(ident: Identifier,
         require(!snapshot.hasDeltas,
           s"table ${name()} has merge-on-read delta files; reads require " +
             "spark.sql.extensions=graft.GraftExtensions (or compact() first)")
-        // three pruning layers before a byte is read: key-bucket
-        // (equality lookups), manifest min/max file skipping (range /
-        // equality / null predicates), then parquet row-group stats
-        // inside the files that survive
-        // snapshot-pinned: the index holds exactly the manifest's
-        // surviving files, so concurrent commits never change what this
-        // scan reads (Iceberg-style isolation)
-        val index = StoreFileIndex(spark,
-          store.dataFiles(snapshot, pruneKeys, filters.toSeq))
-        new GraftParquetScanBuilder(spark, index, dataSchema)
-          .withPushdown(required, filters)
+        super.build().copy(fileIndex = index.narrow(dataFilters))
       }
-    }
-
-  /** Thin subclass whose only job is to apply externally-decided
-    * pushdown state (required columns + source filters) and build —
-    * `pushedDataFilters` is protected in [[FileScanBuilder]], so the
-    * convertible-filter handoff to the parquet reader has to happen
-    * from a subclass.
-    */
-  private class GraftParquetScanBuilder(
-      spark: SparkSession,
-      index: StoreFileIndex,
-      dataSchema: StructType)
-      extends ParquetScanBuilder(spark, index, dataSchema, dataSchema,
-        CaseInsensitiveStringMap.empty()) {
-    def withPushdown(required: StructType, filters: Array[Filter]): Scan = {
-      pruneColumns(required)
-      pushedDataFilters = pushDataFilters(filters)
-      build()
     }
   }
 

@@ -1,10 +1,10 @@
 package graft.catalog
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, EqualTo, Expression, PredicateHelper}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, AttributeSet, Expression, OuterReference, PredicateHelper, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias, V2WriteCommand}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
 /** Merge-on-read for SQL: replace every READ of a store table whose
@@ -12,17 +12,22 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
   * latest delta row per key replaces the key's base row, tombstones
   * drop), so `SELECT … FROM cat.ns.t` stays correct between delta
   * commits and compaction. Delta-free tables never hit this rule —
-  * they keep the pure vectorized DSv2 scan (with bucket pruning and
-  * manifest min/max skipping) untouched.
+  * they keep the pure vectorized DSv2 scan.
   *
   * The substituted plan is ordinary Catalyst over the pinned
   * snapshot's files, read through [[graft.store.StoreFileIndex]] (no
-  * listing, no Spark job at planning): the deltas are normalized by a
-  * `max_by` partial aggregation, the base is anti-joined on the changed
-  * keys and the two are unioned, so pushdown and AQE apply to it like
-  * any query. A full-key equality filter directly above the relation
-  * (`WHERE id = 7`, through its alias) overlays only that key's bucket
-  * under each live spec; the filter stays and Spark re-applies it.
+  * listing, no Spark job at planning), which picks each scan's files
+  * from the predicates Spark pushes to it: the deltas are normalized by
+  * a `max_by` partial aggregation, the base is anti-joined on the
+  * changed keys and the two are unioned. A filter above the overlay
+  * reaches the base scan but not the deltas (nothing is inferred across
+  * the null-safe anti-join or into the aggregation), so the one job
+  * left here is that: every conjunct of a filter directly above the
+  * relation (through its alias) that is deterministic, has no subquery
+  * and references only key columns is also applied to the base and raw
+  * delta rows before the fold — sound because it keeps or drops whole
+  * key groups. `WHERE id = 7`, `id IN (…)` and key ranges then prune
+  * both sides; the filter stays and Spark re-applies it.
   *
   * Write commands keep their original relation: only the query side
   * of a [[V2WriteCommand]] is rewritten — substituting the write
@@ -44,8 +49,8 @@ case class GraftDeltaReadRule(session: SparkSession) extends Rule[LogicalPlan]
     plan.transformDownWithSubqueries {
       case f @ Filter(cond, a @ SubqueryAlias(_, r: DataSourceV2Relation))
           if needsOverlay(r) =>
-        f.copy(child = a.copy(child = overlay(r, keyLiterals(cond, r))))
-      case r: DataSourceV2Relation if needsOverlay(r) => overlay(r, None)
+        f.copy(child = a.copy(child = overlay(r, keyConjuncts(cond, r))))
+      case r: DataSourceV2Relation if needsOverlay(r) => overlay(r, Nil)
     }
 
   private def needsOverlay(r: DataSourceV2Relation): Boolean =
@@ -54,32 +59,26 @@ case class GraftDeltaReadRule(session: SparkSession) extends Rule[LogicalPlan]
       case _ => false
     }
 
-  /** The key values `cond` pins when its conjuncts equate every key
-    * column of `r` to a constant. */
-  private def keyLiterals(cond: Expression,
-      r: DataSourceV2Relation): Option[Map[String, Any]] = {
-    val keys = r.table.asInstanceOf[GraftSqlTable].snapshot.keyCols
-    // a constant that fails to evaluate (1/0 under ANSI) prunes
-    // nothing and fails, if ever, where Spark evaluates it
-    def constant(a: AttributeReference, v: Expression): Option[(String, Any)] =
-      if (!v.foldable || !r.outputSet.contains(a)) None
-      else scala.util.Try(v.eval()).toOption.map(x =>
-        a.name -> CatalystTypeConverters.convertToScala(x, a.dataType))
-    val pinned = splitConjunctivePredicates(cond).flatMap {
-      case EqualTo(a: AttributeReference, v) => constant(a, v)
-      case EqualTo(v, a: AttributeReference) => constant(a, v)
-      case _ => None
-    }.toMap
-    if (keys.forall(pinned.contains)) Some(pinned.filter(kv => keys.contains(kv._1)))
-    else None
+  /** The conjuncts of `cond` the overlay may apply before its fold. */
+  private def keyConjuncts(cond: Expression,
+      r: DataSourceV2Relation): Seq[Expression] = {
+    val keyCols = r.table.asInstanceOf[GraftSqlTable].snapshot.keyCols
+    val keys = AttributeSet(r.output.filter(a => keyCols.contains(a.name)))
+    splitConjunctivePredicates(cond).filter(c => c.deterministic &&
+      !SubqueryExpression.hasSubquery(c) && c.find(_.isInstanceOf[OuterReference]).isEmpty &&
+      c.references.nonEmpty && c.references.subsetOf(keys))
   }
 
-  private def overlay(r: DataSourceV2Relation,
-      keyValues: Option[Map[String, Any]]): LogicalPlan = {
+  private def overlay(r: DataSourceV2Relation, keyConds: Seq[Expression]): LogicalPlan = {
     val t = r.table.asInstanceOf[GraftSqlTable]
-    val read = keyValues.map(t.store.readWhere(t.snapshot, _))
-      .getOrElse(t.store.readSnapshot(t.snapshot))
-    val merged = read.queryExecution.analyzed
+    val read = t.store.readSnapshot(t.snapshot).queryExecution.analyzed
+    // the overlay's leaves are its base and delta file scans: each gets
+    // the key conjuncts, bound by name to its own columns
+    val merged = keyConds.reduceOption(And).fold(read)(cond => read.transformUp {
+      case l: LogicalRelation => Filter(cond.transform {
+        case a: AttributeReference => l.output.find(_.name == a.name).get
+      }, l)
+    })
     // graft the overlay under the relation's attribute ids so every
     // reference above the former relation still resolves
     Project(r.output.map { to =>

@@ -218,8 +218,8 @@ case class GraftMergeCommand(location: String, batch: LogicalPlan,
       val op = opCol.getOrElse("__merge_op")
       val upserts =
         if (opCol.isDefined) df else df.withColumn(op, lit("u"))
-      val dels = UpsertTable.withoutKeys(store.readSnapshot(snap)
-        .select(snap.keyCols.map(col): _*), df, snap.keyCols)
+      val dels = UpsertTable.keyJoin(store.readSnapshot(snap)
+        .select(snap.keyCols.map(col): _*), df, snap.keyCols, "left_anti")
       store.merge(upserts.unionByName(dels.withColumn(op, lit("d")),
         allowMissingColumns = true), opCol = Some(op))
     }

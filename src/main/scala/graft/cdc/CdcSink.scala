@@ -177,7 +177,8 @@ object CdcSink {
         // arrives WITH its records, which is exactly the guarantee the
         // bare path has to reconstruct by sampling
         val wireSchema = framed.flatMap(ConnectSchema.rowSchema)
-        val cachedSchema = target.currentSnapshot.map(s =>
+        // lazy: only the bare-envelope path reads the manifest here
+        lazy val cachedSchema = target.currentSnapshot.map(s =>
           payloadSchemaFor(s.schema, microTsCols.getOrElse(table, Seq.empty)))
         def bareSchema = cachedSchema match {
           case None => infer()

@@ -1767,11 +1767,12 @@ object StoreQueries {
     // commit's own change feed must contain exactly the erased rows,
     // all as op 'd' (the evidence a DPO files), and compaction then
     // physically rewrites the current files. The reverse lookup
-    // (user → their rows) runs through the per-file Bloom index on the
-    // declared `user_id` lookup column ([[UpsertTable.readLookup]]):
-    // erasure opens only the files whose bloom admits a victim, never
-    // the whole fact table (LookupBloomSpec proves the pruning; this
-    // gate proves the result). The victim id list is the request
+    // (user → their rows) is `read().where(user_id IN …)`: the store's
+    // file planner ([[graft.store.StoreFileIndex]]) probes the per-file
+    // Bloom index on the declared `user_id` lookup column, so erasure
+    // opens only the base files whose bloom admits a victim, never the
+    // whole fact table (LookupBloomSpec proves the pruning; this gate
+    // proves the result). The victim id list is the request
     // payload — bounded driver-side by nature. The gate reads the
     // post-erasure table per user — one surviving erased row
     // hash-mismatches.
@@ -1791,7 +1792,7 @@ object StoreQueries {
       val victimIds = ev.where(col("user_id") % 10 === 0)
         .select("user_id").distinct()
         .collect().map(_.getLong(0)).toSeq // the erasure request payload
-      val victims = t.readLookup("user_id", victimIds)
+      val victims = t.read().where(col("user_id").isin(victimIds: _*))
       t.merge(victims.withColumn("__op", lit("d")),
         opCol = Some("__op"), delta = true)
       val v2 = t.currentSnapshot.get.version

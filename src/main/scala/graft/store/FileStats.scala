@@ -228,7 +228,7 @@ object FileStats {
   * Each bloom is sized by its file's non-null count, at least 64, at
   * [[UpsertTable.LookupBloomFpp]]. Integral values go in with
   * `putLong` and strings as their UTF-8 bytes (what `putString` does),
-  * which is what [[UpsertTable.lookupFiles]] probes with, so blooms of
+  * which is what [[StoreFileIndex]] probes with, so blooms of
   * earlier versions stay compatible. A file's values are buffered until
   * it closes.
   *

@@ -37,18 +37,18 @@ object IncrementalAgg {
 
   /** Steps 2-3: group-level deltas from the net changes — prior
     * contributions come from a time-travel read of the source AT
-    * `fromV` SEMI-JOINED to the changed keys (the refresh's only
-    * touch of the source; never a full-source aggregate — pinned in
-    * PlanShapeSpec). Null measures contribute 0 (matching
-    * [[fullCountSum]]): an un-coalesced null would poison sum(__dv)
-    * for a group whose only in-range change carries a null value,
-    * writing sv = NULL into the target where the from-scratch sum
-    * says otherwise. */
+    * `fromV` SEMI-JOINED to the changed keys, null-safely as
+    * `netChanges` groups them (the refresh's only touch of the source;
+    * never a full-source aggregate — pinned in PlanShapeSpec). Null
+    * measures contribute 0 (matching [[fullCountSum]]): an
+    * un-coalesced null would poison sum(__dv) for a group whose only
+    * in-range change carries a null value, writing sv = NULL into the
+    * target where the from-scratch sum says otherwise. */
   private[graft] def groupDeltas(source: UpsertTable, fromV: Long,
       net: DataFrame, keyCol: String, groupCol: String,
       valueCol: String): DataFrame = {
-    val prior = source.readVersion(fromV)
-      .join(net.select(keyCol), Seq(keyCol), "left_semi")
+    val prior = UpsertTable
+      .keyJoin(source.readVersion(fromV), net, Seq(keyCol), "left_semi")
       .select(col(keyCol), col(groupCol), col(valueCol))
     val adds = net.where(col("_change_op") =!= "d")
       .select(col(groupCol), lit(1L).as("__dn"),

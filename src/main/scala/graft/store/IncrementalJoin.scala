@@ -100,7 +100,7 @@ object IncrementalJoin {
         var affected = aCur
           .join(changedDim, aCur(fkCol) === changedDim(bKey), "left_semi")
         if (netA != null)
-          affected = UpsertTable.withoutKeys(affected, netA, Seq(aKey))
+          affected = UpsertTable.keyJoin(affected, netA, Seq(aKey), "left_anti")
         legs += joinDim(affected).withColumn("__op", lit("u"))
       }
       if (legs.nonEmpty)

@@ -26,9 +26,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * @param timestampMs wall-clock commit time (drives expiry, C6)
   * @param operation   what kind of commit produced this version
   *                    ("create" / "merge" / "delta-merge" / "compact" /
-  *                    "cluster" / "rewrite" / "evolve" / "overwrite" /
-  *                    "rollback"; "" on manifests written before the
-  *                    field existed) — drives the change feed's
+  *                    "cluster" / "rewrite" / "respec" / "evolve" /
+  *                    "overwrite" / "rollback"; "" on manifests written
+  *                    before the field existed) — drives the change feed's
   *                    servability check and commit-history inspection
   * @param lookupCols  declared secondary-lookup columns: every commit
   *                    records a per-file Bloom filter for each (see
@@ -91,7 +91,12 @@ case class FileEntry(path: String, bucket: Int,
     stats: Map[String, ColStats] = Map.empty,
     kind: String = FileEntry.Base, seq: Long = 0L,
     blooms: Map[String, String] = Map.empty,
-    spec: Int = 0)
+    spec: Int = 0) {
+
+  /** The bucket count `bucket` was assigned under, in a snapshot whose
+    * current count is `current`. */
+  def specUnder(current: Int): Int = if (spec > 0) spec else current
+}
 
 object FileEntry {
   val Base = "base"

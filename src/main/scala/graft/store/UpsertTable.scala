@@ -33,8 +33,9 @@ import org.apache.spark.util.SerializableConfiguration
   * within it, whose write tasks return each file's manifest entry
   * (bounds and lookup blooms included). Reads are plain vectorized
   * parquet scans over the current snapshot's file list, planned from
-  * the manifest by [[StoreFileIndex]] (no directory listing), so
-  * Catalyst pushdown/pruning apply untouched.
+  * the manifest by [[StoreFileIndex]] (no directory listing), the one
+  * planner that picks each scan's files from the predicates Spark
+  * pushes to it: key bucket, column bounds and lookup blooms.
   */
 class UpsertTable(spark: SparkSession, val location: String) {
   import UpsertTable._
@@ -163,7 +164,7 @@ class UpsertTable(spark: SparkSession, val location: String) {
       .map { case (v, s, deltas) =>
         val deltaSchema = StructType(s.schema.fields ++ Seq(
           StructField(OpCol, StringType), StructField(SeqCol, LongType)))
-        alignTypes(readFiles(deltas, deltaSchema), targetSchema)
+        alignTypes(readFiles(s, deltas, deltaSchema), targetSchema)
           .select((targetSchema.fieldNames.map(col) :+
             // delta files hold the raw source op (Debezium r|c|u|d) —
             // normalize to the feed's documented u/d contract so
@@ -218,131 +219,19 @@ class UpsertTable(spark: SparkSession, val location: String) {
     }
   }
 
-  /** Bucket count file `f`'s bucket id was assigned under: explicit
-    * when a lazy respec ([[rebucketLazy]]) pinned it, otherwise the
-    * snapshot's own current spec (files are always written under the
-    * spec current at their commit).
+  /** Bucket id under the current spec for a full primary-key value
+    * tuple, or None if any key column is missing: the driver-side hash
+    * the file planner prunes by ([[StoreFileIndex]]).
     */
-  private def fileSpec(snap: Snapshot, f: FileEntry): Int =
-    if (f.spec > 0) f.spec else snap.numBuckets
-
-  /** Bucket id for a full primary-key value tuple, or None if any key
-    * column is missing — the same murmur3(42) % n as [[UpsertTable.bucketExpr]],
-    * evaluated driver-side (a literal hashes identically to a column).
-    */
-  def bucketFor(keyValues: Map[String, Any]): Option[Int] =
-    Some(snapshotOrFail).flatMap(s => bucketForUnder(s, keyValues, s.numBuckets))
-
-  private def bucketForUnder(snap: Snapshot, keyValues: Map[String, Any],
-      n: Int): Option[Int] = {
-    if (!snap.keyCols.forall(keyValues.contains)) return None
-    val sch = snap.schema
-    val exprs = snap.keyCols.map { k =>
-      org.apache.spark.sql.catalyst.expressions.Literal
-        .create(keyValues(k), sch(k).dataType)
-    }
-    val h = new org.apache.spark.sql.catalyst.expressions.Murmur3Hash(exprs)
-      .eval(null).asInstanceOf[Int]
-    Some(((h % n) + n) % n)
-  }
-
-  /** The file subset a full-key equality lookup must read, resolved
-    * PER FILE SPEC: under a single spec this is one bucket's files;
-    * after a lazy respec, the key's bucket under EACH live spec.
-    */
-  private def keyPrunedFiles(snap: Snapshot,
-      keyValues: Map[String, Any]): Option[Seq[FileEntry]] =
-    if (!snap.keyCols.forall(keyValues.contains)) None
-    else Some(snap.files.groupBy(fileSpec(snap, _)).toSeq.flatMap {
-      case (n, fs) =>
-        val b = bucketForUnder(snap, keyValues, n).get
-        fs.filter(_.bucket == b)
-    })
-
-  /** Bucket-pruned read for a full-key equality lookup: touches only
-    * the key's bucket under each live spec — at 4096 buckets a point
-    * query on a 100 TB table scans ~1/4096 of it. The result still
-    * contains the bucket's OTHER keys; callers (Spark's residual
-    * filter, through the catalog) re-apply the predicate.
-    */
-  def readWhere(keyValues: Map[String, Any]): DataFrame =
-    readWhere(snapshotOrFail, keyValues)
-
-  /** [[readWhere]] over the resolved snapshot `snap`. */
-  def readWhere(snap: Snapshot, keyValues: Map[String, Any]): DataFrame =
-    keyPrunedFiles(snap, keyValues) match {
-      case Some(sel) => mergedView(sel, snap.schema, snap.keyCols)
-      case None => readSnapshot(snap)
-    }
-
-  /** The file subset a reverse lookup `column IN values` must read:
-    * every DELTA file (recent commits — always kept, so tombstones and
-    * re-keyed updates can never be skipped into staleness) plus the
-    * BASE files whose Bloom filter admits at least one value (no bloom
-    * recorded = kept). Bloom no-false-negatives makes the prune sound
-    * unconditionally: a base key at most once per bucket means a
-    * pruned base file can only hide row versions that either don't
-    * match the lookup or are superseded by a delta that IS read.
-    */
-  def lookupFiles(column: String, values: Seq[Any]): Seq[FileEntry] =
-    lookupFilesIn(snapshotOrFail, column, values)
-
-  /** [[lookupFiles]] over the resolved snapshot `snap`. */
-  private def lookupFilesIn(snap: Snapshot, column: String,
-      values: Seq[Any]): Seq[FileEntry] =
-    snap.files.filter { f =>
-      FileEntry.isDelta(f) || (f.blooms.get(column) match {
-        case None => true
-        case Some(b64) =>
-          val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
-            new java.io.ByteArrayInputStream(
-              java.util.Base64.getDecoder.decode(b64)))
-          values.exists {
-            case l: Long => bf.mightContainLong(l)
-            case i: Int => bf.mightContainLong(i.toLong)
-            case s: String => bf.mightContainString(s)
-            case other => bf.mightContain(other)
-          }
-      })
-    }
-
-  /** Reverse lookup by a declared secondary column (the GDPR
-    * user→rows path): the merged current-state view restricted to
-    * [[lookupFiles]] with the residual predicate re-applied — exactly
-    * `read().where(column IN values)`, at the cost of the admitted
-    * files instead of the table. At 100 TB with per-user blooms an
-    * erasure request opens the handful of files that ever stored the
-    * user, not the fact table.
-    */
-  def readLookup(column: String, values: Seq[Any]): DataFrame = {
-    val snap = snapshotOrFail
-    mergedView(lookupFilesIn(snap, column, values), snap.schema, snap.keyCols)
-      .where(col(column).isin(values: _*))
-  }
-
-  /** Absolute data-file paths of `snap` (the current snapshot by
-    * default), restricted to the single key bucket when a full
-    * key-equality map is given, then skipped against each file's
-    * manifest column bounds for the pushed `filters` (planning-time
-    * data skipping; see [[FileStats]]) — feeds the catalog's DSv2
-    * scan, which hands them straight to Spark's vectorized parquet
-    * reader.
-    */
-  def dataFiles(snap: Snapshot = snapshotOrFail,
-      pruneKeys: Option[Map[String, Any]] = None,
-      filters: Seq[org.apache.spark.sql.sources.Filter] = Seq.empty)
-      : Seq[String] = {
-    val bucketed = pruneKeys.flatMap(keyPrunedFiles(snap, _))
-      .getOrElse(snap.files)
-    val sch = snap.schema
-    val kept = bucketed.filter(f =>
-      filters.forall(FileStats.mightMatch(f.stats, sch, _)))
-    kept.map(f => s"$location/${f.path}")
+  def bucketFor(keyValues: Map[String, Any]): Option[Int] = {
+    val s = snapshotOrFail
+    if (!s.keyCols.forall(keyValues.contains)) None
+    else Some(StoreFileIndex.bucketOf(s.schema, s.keyCols, s.keyCols.map(keyValues),
+      s.numBuckets))
   }
 
   /** Current-state read of one resolved snapshot (see [[read]]). */
-  def readSnapshot(s: Snapshot): DataFrame =
-    mergedView(s.files, s.schema, s.keyCols)
+  def readSnapshot(s: Snapshot): DataFrame = mergedView(s, s.files)
 
   /** Current-state view over a file subset: base files verbatim when
     * no deltas are present (the zero-overhead fast path — a single
@@ -355,28 +244,29 @@ class UpsertTable(spark: SparkSession, val location: String) {
     * This is the read tax merge-on-read trades for O(batch) commits;
     * [[compact]] pays it down.
     */
-  private def mergedView(files: Seq[FileEntry], schema: StructType,
-      keys: Seq[String]): DataFrame = {
+  private def mergedView(snap: Snapshot, files: Seq[FileEntry]): DataFrame = {
+    val (schema, keys) = (snap.schema, snap.keyCols)
     val (deltas, bases) = files.partition(FileEntry.isDelta)
-    val base = readFiles(bases, schema)
+    val base = readFiles(snap, bases, schema)
     if (deltas.isEmpty) return base
     val deltaSchema = StructType(schema.fields ++ Seq(
       StructField(OpCol, StringType), StructField(SeqCol, LongType)))
     overlay(base, ChangelogNormalize.latestByKey(
-      readFiles(deltas, deltaSchema), keys, SeqCol), schema, keys)
+      readFiles(snap, deltas, deltaSchema), keys, SeqCol), schema, keys)
   }
 
   /** The only fold of changes into stored rows (reads, [[compact]], the
     * merge-on-write rewrite): `latest` (one row per key, with [[OpCol]])
     * replaces its key's `base` row, `d` tombstones drop, base rows never
-    * shuffle ([[withoutKeys]]), and NULL is a key value, as in `groupBy`. */
+    * shuffle ([[keyJoin]]), and NULL is a key value, as in `groupBy`. */
   private def overlay(base: DataFrame, latest: DataFrame, schema: StructType,
       keys: Seq[String]): DataFrame =
-    withoutKeys(base, latest, keys).unionByName(latest
+    keyJoin(base, latest, keys, "left_anti").unionByName(latest
       .where(col(OpCol) =!= "d").select(schema.fieldNames.map(col).toSeq: _*))
 
-  private def readFiles(files: Seq[FileEntry], schema: StructType): DataFrame =
-    StoreFileIndex.read(spark, files.map(f => s"$location/${f.path}"), schema)
+  private def readFiles(snap: Snapshot, files: Seq[FileEntry],
+      schema: StructType): DataFrame =
+    StoreFileIndex.read(spark, location, snap, files, schema)
 
   /** CDC/upsert merge of one micro-batch (SURVEY.md §2.3 C1/C2/C4).
     *
@@ -512,7 +402,7 @@ class UpsertTable(spark: SparkSession, val location: String) {
       // layout it might live in. Touched old-spec files are rewritten
       // under the CURRENT spec — the incremental migration path.
       val liveSpecs =
-        (snap.files.map(fileSpec(snap, _)) :+ snap.numBuckets).distinct
+        (snap.files.map(_.specUnder(snap.numBuckets)) :+ snap.numBuckets).distinct
       val touchedBySpec: Map[Int, Set[Int]] = liveSpecs.map { n =>
         n -> (if (unservableWiden) (0 until n).toSet
         else normalized.select(bucketExpr(snap.keyCols, n).as("b"))
@@ -520,14 +410,14 @@ class UpsertTable(spark: SparkSession, val location: String) {
       }.toMap
 
       val (oldAffected, untouched) = snap.files.partition(f =>
-        touchedBySpec(fileSpec(snap, f))(f.bucket))
+        touchedBySpec(f.specUnder(snap.numBuckets))(f.bucket))
       // current-state view of the rewritten buckets under the OLD
       // manifest schema (every live file is promotable-readable under
       // it by invariant; pending deltas in these buckets are overlaid
       // and absorbed by this rewrite), align-cast to the evolved
       // schema; the batch folds over it as every read's deltas do
       val rewritten = overlay(
-        align(mergedView(oldAffected, oldSchema, snap.keyCols), newSchema),
+        align(mergedView(snap, oldAffected), newSchema),
         normalized, newSchema, snap.keyCols)
       val newFiles = writeFiles(snap, rewritten,
         snap.numBuckets, newSchema, snap.keyCols.map(col))
@@ -573,7 +463,7 @@ class UpsertTable(spark: SparkSession, val location: String) {
     val snap = snapshotOrFail
     if (snap.numBuckets == newNumBuckets) return
     publish(snap.version, "respec", snap.copy(numBuckets = newNumBuckets,
-      files = snap.files.map(f => f.copy(spec = fileSpec(snap, f)))))
+      files = snap.files.map(f => f.copy(spec = f.specUnder(snap.numBuckets)))))
   }
 
   /** Maintenance rewrite of every data file under the current manifest
@@ -611,8 +501,8 @@ class UpsertTable(spark: SparkSession, val location: String) {
     val snap = snapshotOrFail
     // group by (spec, bucket): after a lazy respec the same bucket id
     // under different specs names different key sets
-    def grp(f: FileEntry): (Int, Int) = (fileSpec(snap, f), f.bucket)
-    val mixed = snap.files.exists(f => fileSpec(snap, f) != snap.numBuckets)
+    def grp(f: FileEntry): (Int, Int) = (f.specUnder(snap.numBuckets), f.bucket)
+    val mixed = snap.files.exists(f => f.specUnder(snap.numBuckets) != snap.numBuckets)
     val byGrp = snap.files.groupBy(grp)
     // over-threshold = too many files in a group, PLUS (mixed state) any
     // delta group with no base beside it: its overlay depth spans specs
@@ -638,16 +528,16 @@ class UpsertTable(spark: SparkSession, val location: String) {
     // delta. This is the migration pay-down of [[rebucketLazy]] — the
     // whole old layout folds into the current spec in one compaction.
     if (mixed && toRewrite.exists(f =>
-        FileEntry.isDelta(f) && fileSpec(snap, f) == snap.numBuckets)) {
+        FileEntry.isDelta(f) && f.specUnder(snap.numBuckets) == snap.numBuckets)) {
       val sel = toRewrite.toSet
       toRewrite = toRewrite ++ snap.files.filter(f =>
-        fileSpec(snap, f) != snap.numBuckets && !sel(f))
+        f.specUnder(snap.numBuckets) != snap.numBuckets && !sel(f))
     }
     val untouched = snap.files.filterNot(toRewrite.toSet)
     // current-state view of just those groups (delta overlay applied,
     // tombstones dropped), written back bucket-partitioned under the
     // CURRENT spec — old-spec survivors migrate here
-    val written = writeFiles(snap, mergedView(toRewrite, snap.schema, snap.keyCols),
+    val written = writeFiles(snap, mergedView(snap, toRewrite),
       snap.numBuckets, snap.schema, snap.keyCols.map(col))
     publish(snap.version, "compact", snap.copy(files = untouched ++ written))
     over.size
@@ -1030,8 +920,8 @@ object UpsertTable {
 
   /** Session conf declaring secondary-lookup columns (comma-separated)
     * for newly created tables: every commit then records a per-file
-    * Bloom filter on each, so reverse lookups ([[UpsertTable.readLookup]])
-    * prune files at planning time. The declaration persists in the
+    * Bloom filter on each, so reverse lookups (`read().where(c IN …)`)
+    * prune files at planning time ([[StoreFileIndex]]). The declaration persists in the
     * manifest ([[Snapshot.lookupCols]]).
     */
   val LookupBloomsConf = "graft.store.lookupBloomCols"
@@ -1071,13 +961,14 @@ object UpsertTable {
   def bucketExpr(keys: Seq[String], numBuckets: Int): Column =
     pmod(hash(keys.map(col): _*), lit(numBuckets))
 
-  /** `rows` without those whose key is in `changed`, compared
-    * null-safely as `groupBy` groups: the overlay's comparison, shared
-    * by every anti-join on a store's primary key. */
-  private[graft] def withoutKeys(rows: DataFrame, changed: DataFrame,
-      keys: Seq[String]): DataFrame =
+  /** `rows` whose key is in `changed` (`how` = `left_semi`) or is not
+    * (`left_anti`), compared null-safely as `groupBy` groups: the
+    * overlay's comparison, shared by every semi- and anti-join on a
+    * store's primary key. */
+  private[graft] def keyJoin(rows: DataFrame, changed: DataFrame,
+      keys: Seq[String], how: String): DataFrame =
     rows.join(changed.select(keys.map(k => col(k).as(s"__changed_$k")): _*),
-      keys.map(k => col(k) <=> col(s"__changed_$k")).reduce(_ && _), "left_anti")
+      keys.map(k => col(k) <=> col(s"__changed_$k")).reduce(_ && _), how)
 
   /** Per-row 60-bit content hash over the given columns in NAME order
     * (sorted, so projection order can't change the fingerprint) —

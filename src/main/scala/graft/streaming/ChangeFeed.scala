@@ -153,17 +153,17 @@ private[streaming] class ChangeFeedStream(location: String,
       : Array[InputPartition] = {
     val from = start.asInstanceOf[VersionOffset].v
     val to = end.asInstanceOf[VersionOffset].v
-    val paths: Seq[String] =
+    val files =
       if (to <= from) Seq.empty
-      else store.changeFeedEntries(from, to).flatMap { case (_, _, deltas) =>
-        deltas.map(f => s"$location/${f.path}")
-      }
+      else store.changeFeedEntries(from, to).flatMap(_._3)
     // Spark's own DSv2 parquet batch over the pinned file list (the
     // store's manifest-built index: no listing job): the files already
     // carry __op and __seq(=commit version) columns, so no per-row
     // custom reader is needed — vectorized reading and whole-stage
-    // codegen come for free (the S7 batch-scan shape)
-    currentBatch = new FeedScanBuilder(StoreFileIndex(spark, paths))
+    // codegen come for free (the S7 batch-scan shape). No filter
+    // reaches it, so the index needs no keys to prune by
+    currentBatch = new FeedScanBuilder(
+      new StoreFileIndex(spark, location, files, Nil, 0, feedSchema))
       .buildAll().toBatch
     currentBatch.planInputPartitions()
   }

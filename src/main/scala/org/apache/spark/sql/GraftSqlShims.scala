@@ -31,6 +31,14 @@ object GraftSqlShims {
   def expressionOf(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
 
+  /** The data source filter Spark pushes to a file scan for predicate
+    * `e`, if it has one: what [[graft.store.StoreFileIndex]] plans with.
+    */
+  def translateFilter(e: org.apache.spark.sql.catalyst.expressions.Expression)
+      : Option[sources.Filter] =
+    execution.datasources.DataSourceStrategy.translateFilter(e,
+      supportNestedPredicatePushdown = false)
+
   /** `schema` with every field nullable at every depth — what a file
     * source reads under ([[graft.store.StoreFileIndex.read]]), as
     * `DataFrameReader` does.

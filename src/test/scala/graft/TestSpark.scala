@@ -2,8 +2,14 @@ package graft
 
 import scala.util.Try
 
-import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, FileScan}
 import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.sources.Filter
+
+import graft.store.{FileEntry, StoreFileIndex, UpsertTable}
 
 object TestSpark {
   lazy val spark: SparkSession = GraftSession.local("4")
@@ -72,6 +78,31 @@ object TestSpark {
     }
     import scala.jdk.CollectionConverters._
     jobs.asScala.toSeq
+  }
+
+  /** The entries of `t`'s current snapshot a read under the conjuncts
+    * `filters` opens, as the store's file planner selects them. */
+  def selectFiles(t: UpsertTable, filters: Filter*): Seq[FileEntry] = {
+    val snap = t.currentSnapshot.get
+    StoreFileIndex(spark, t.location, snap, snap.files).select(filters)
+  }
+
+  /** [[selectFiles]] as absolute paths. */
+  def selectPaths(t: UpsertTable, filters: Filter*): Seq[String] =
+    selectFiles(t, filters: _*).map(f => s"${t.location}/${f.path}")
+
+  /** Runs `df`, then sums the files its executed scans opened, as
+    * perfbench counts them: a file source scan's `numFiles` and the
+    * index a DSv2 file scan was built over. */
+  def filesRead(df: DataFrame): Long = {
+    df.collect()
+    new AdaptiveSparkPlanHelper {}.collectWithSubqueries(df.queryExecution.executedPlan) {
+      case s: FileSourceScanExec => s.metrics.get("numFiles").map(_.value).getOrElse(0L)
+      case b: BatchScanExec => b.scan match {
+        case f: FileScan => f.fileIndex.inputFiles.length.toLong
+        case _ => 0L
+      }
+    }.sum
   }
 
   /** The shared run of query `name` over `sf`; rethrows its failure. */

@@ -32,9 +32,11 @@ class DmlBucketPruneSpec extends AnyFunSuite {
   }
 
   /** (path -> md5) inventory of a table's current data files. */
-  private def inventory(tbl: String): Map[String, String] =
-    UpsertTable(spark, s"$warehouse/dml/$tbl").dataFiles()
+  private def inventory(tbl: String): Map[String, String] = {
+    val t = UpsertTable(spark, s"$warehouse/dml/$tbl")
+    t.currentSnapshot.get.files.map(f => s"${t.location}/${f.path}")
       .map(p => p -> md5(p)).toMap
+  }
 
   private def bucketOf(path: String): Int =
     "__bucket=(\\d+)".r.findFirstMatchIn(path).get.group(1).toInt

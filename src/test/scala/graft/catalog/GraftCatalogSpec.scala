@@ -101,7 +101,7 @@ class GraftCatalogSpec extends AnyFunSuite {
     val all = t.currentSnapshot.get.files
     val pruned = t.bucketFor(Map("k" -> 42)).get
     assert(all.count(_.bucket == pruned) < all.size)
-    assert(t.readWhere(Map("k" -> 42)).where($"k" === 42).count() === 1)
+    assert(t.read().where($"k" === 42).count() === 1)
     // SQL level: point lookup is correct and matches the full scan
     val lookup = spark.sql("SELECT v FROM graft_t.cdc.t_prune WHERE k = 42")
     assert(lookup.head().getString(0) === "v42")

@@ -8,9 +8,10 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.TestSpark.selectPaths
 
 /** Manifest column bounds + planning-time file skipping: the commit
-  * path must record per-file min/max/nullCount, and `dataFiles` must
+  * path must record per-file min/max/nullCount, and the file planner must
   * drop files a pushed predicate provably cannot match — without ever
   * changing query answers (conservative-only pruning).
   */
@@ -101,20 +102,20 @@ class FileStatsSpec extends AnyFunSuite {
     val df = (1L to 800L).map(i => (i, (i / 8).toInt, s"doc$i"))
       .toDF("id", "n", "s")
     t.merge(df)
-    val total = t.dataFiles().size
+    val total = selectPaths(t).size
     assert(total === 8)
     // n ranges overlap across buckets (hash spread), so a tight range
     // cannot be proven on every file — but an out-of-domain predicate
     // must drop ALL files, and a broad one must keep them
-    assert(t.dataFiles(filters = Seq(GreaterThan("n", 1000))).isEmpty)
-    assert(t.dataFiles(filters = Seq(LessThan("n", -1))).isEmpty)
-    assert(t.dataFiles(filters = Seq(IsNotNull("n"))).size === total)
+    assert(selectPaths(t, GreaterThan("n", 1000)).isEmpty)
+    assert(selectPaths(t, LessThan("n", -1)).isEmpty)
+    assert(selectPaths(t, IsNotNull("n")).size === total)
 
     // per-bucket disjoint ranges: overwrite with id == n so each
     // bucket's file still spans a wide range; instead check the SQL
     // answer equivalence under pruning directly through read paths
     val wanted = df.where(col("n") > 95).count()
-    val paths = t.dataFiles(filters = Seq(GreaterThan("n", 95)))
+    val paths = selectPaths(t, GreaterThan("n", 95))
     val viaPruned = spark.read.schema(t.schema)
       .parquet(paths: _*).where(col("n") > 95).count()
     assert(viaPruned === wanted)
@@ -133,8 +134,8 @@ class FileStatsSpec extends AnyFunSuite {
     }
     t.compact() // collapse to base per bucket: ranges mix again
     // after compaction every file spans everything -> no skip possible
-    assert(t.dataFiles(filters = Seq(GreaterThanOrEqual("n", 500))).size
-      === t.dataFiles().size)
+    assert(selectPaths(t, GreaterThanOrEqual("n", 500)).size
+      === selectPaths(t).size)
 
     // fresh table, keep the deltas
     val t2 = tmpTable()
@@ -144,15 +145,15 @@ class FileStatsSpec extends AnyFunSuite {
       val rows = (0 until 50).map(j => (i * 1000L + j, lo + j, s"b$i"))
       t2.merge(rows.toDF("id", "n", "s"), delta = true)
     }
-    val total = t2.dataFiles().size
-    val hit = t2.dataFiles(filters = Seq(
-      And(GreaterThanOrEqual("n", 500), LessThan("n", 550))))
+    val total = selectPaths(t2).size
+    val hit = selectPaths(t2,
+      And(GreaterThanOrEqual("n", 500), LessThan("n", 550)))
     assert(hit.size < total,
       s"expected pruning: $total files total, ${hit.size} after skip")
     // only the last delta commit's files can contain n >= 500
     assert(hit.size <= 4)
     // skipped files provably held no matching row
-    val all = spark.read.schema(t2.schema).parquet(t2.dataFiles(): _*)
+    val all = spark.read.schema(t2.schema).parquet(selectPaths(t2): _*)
       .where(col("n") >= 500 && col("n") < 550).count()
     val pruned = spark.read.schema(t2.schema).parquet(hit: _*)
       .where(col("n") >= 500 && col("n") < 550).count()
@@ -177,8 +178,8 @@ class FileStatsSpec extends AnyFunSuite {
       "SELECT count(*) AS c FROM graft_fss.m.t WHERE n >= 300").collect()
     assert(got.head.getLong(0) === 25L)
     // stats-based skip at the file-listing layer sees the delta files
-    assert(t.dataFiles(filters = Seq(GreaterThanOrEqual("n", 300))).size <
-      t.dataFiles().size)
+    assert(selectPaths(t, GreaterThanOrEqual("n", 300)).size <
+      selectPaths(t).size)
     // compaction restores the pure-scan fast path, same SQL answer
     t.compact()
     assert(!t.hasDeltas)

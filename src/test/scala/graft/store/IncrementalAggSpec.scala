@@ -113,6 +113,21 @@ class IncrementalAggSpec extends AnyFunSuite {
     check(src, tgt)
   }
 
+  test("a NULL key's prior contribution is retracted like any key's") {
+    val (src, tgt) = tables()
+    src.merge(Seq((Option.empty[Long], "g1", 5L), (Some(1L), "g1", 1L))
+      .toDF("id", "g", "v"), autoCreateKeys = Seq("id"), delta = true)
+    val v1 = src.currentSnapshot.get.version
+    IncrementalAgg.refreshCountSum(spark, src, tgt, v1 - 1, v1, "id", "g", "v")
+    // the NULL key moves from g1 to g2: its g1 contribution must go
+    src.merge(Seq((Option.empty[Long], "g2", 7L)).toDF("id", "g", "v"), delta = true)
+    val v2 = src.currentSnapshot.get.version
+    IncrementalAgg.refreshCountSum(spark, src, tgt, v1, v2, "id", "g", "v")
+    val g1 = tgt.read().where(col("g") === "g1").head()
+    assert((g1.getLong(1), g1.getDouble(2)) === ((1L, 1d)))
+    check(src, tgt)
+  }
+
   test("a key flapping within one range nets to its last image") {
     val (src, tgt) = tables()
     src.merge(Seq((1L, "a", 1L)).toDF("id", "g", "v"),

@@ -2,6 +2,7 @@ package graft.store
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.sources.EqualTo
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -41,9 +42,9 @@ class LazyRespecSpec extends AnyFunSuite {
     assert(t.read().count() === 300)
     // point lookup prunes to the key's bucket under the OLD spec: at 4
     // buckets the selection is ~1/4 of the files, never all of them
-    val sel = t.readWhere(Map("user_id" -> 7))
-    assert(sel.where($"user_id" === 7).count() === 1)
-    val pruned = t.dataFiles(pruneKeys = Some(Map("user_id" -> 7)))
+    val sel = t.read().where($"user_id" === 7)
+    assert(sel.count() === 1)
+    val pruned = TestSpark.selectFiles(t, EqualTo("user_id", 7))
     assert(pruned.nonEmpty && pruned.size < snap.files.size)
   }
 
@@ -66,11 +67,11 @@ class LazyRespecSpec extends AnyFunSuite {
     // data correct across the mixed layout
     assert(t.read().count() === 300)
     assert(t.read().where($"user_id" === 7).head().getString(1) === "u7-v2")
-    assert(t.readWhere(Map("user_id" -> 7))
-      .where($"user_id" === 7).head().getString(1) === "u7-v2")
+    assert(t.read().where($"user_id" === 7)
+      .head().getString(1) === "u7-v2")
     // an untouched key still resolves through its old-spec bucket
-    assert(t.readWhere(Map("user_id" -> 250))
-      .where($"user_id" === 250).head().getString(1) === "u250")
+    assert(t.read().where($"user_id" === 250)
+      .head().getString(1) === "u250")
   }
 
   test("compaction folds the old layout over; tombstones never resurrect") {

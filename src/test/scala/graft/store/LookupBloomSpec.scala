@@ -3,14 +3,17 @@ package graft.store
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.In
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.TestSpark.selectFiles
 
 /** Per-file Bloom lookup stats (the GDPR reverse-index): commits on a
   * table with declared lookup columns must record a bloom per file,
   * reverse lookups must touch only the files whose bloom admits the
-  * probe (never missing a true occurrence), the declaration must
+  * probe (never missing a true occurrence) — the store's file planner
+  * selects them from a `read().where(c IN …)` — the declaration must
   * survive into maintenance commits via the manifest, and the
   * always-keep-deltas rule must make pruning sound even when a key's
   * lookup value CHANGES across versions.
@@ -35,7 +38,8 @@ class LookupBloomSpec extends AnyFunSuite {
         snap.files.forall(_.blooms.contains("user_id")))
 
       // soundness: every file truly containing user 3 is admitted
-      val admitted = t.lookupFiles("user_id", Seq(3L)).map(_.path).toSet
+      def lookup(users: Long*) = t.read().where(col("user_id").isin(users: _*))
+      val admitted = selectFiles(t, In("user_id", Array(3L))).map(_.path).toSet
       val containing = snap.files.filter { f =>
         spark.read.parquet(s"$dir/${f.path}")
           .where(col("user_id") === 3L).count() > 0
@@ -43,35 +47,33 @@ class LookupBloomSpec extends AnyFunSuite {
       assert(containing.nonEmpty && containing.subsetOf(admitted))
       // pruning: the lookup does NOT open the whole table (≤4 true
       // files + 1%-fpp noise out of 16)
-      assert(admitted.size < snap.files.size,
-        s"expected pruning, admitted ${admitted.size}/${snap.files.size}")
+      val opened = TestSpark.filesRead(lookup(3L))
+      assert(opened < snap.files.size,
+        s"expected pruning, opened $opened/${snap.files.size}")
 
-      // exactness: readLookup ≡ full read + residual filter
-      val got = t.readLookup("user_id", Seq(3L))
-        .collect().map(_.getLong(0)).sorted
-      assert(got === t.read().where(col("user_id") === 3L)
-        .collect().map(_.getLong(0)).sorted)
+      // exactness: the pruned lookup ≡ full read + residual filter
+      val got = lookup(3L).collect().map(_.getLong(0)).sorted
+      assert(got === t.read().collect().filter(_.getLong(1) == 3L)
+        .map(_.getLong(0)).sorted)
 
       // re-keyed update: a delta moves key 12 to user 999 — the new
       // user finds it (deltas always read) and user 3 no longer does
       spark.conf.unset(UpsertTable.LookupBloomsConf)
       t.merge(Seq((12L, 999L, 0L)).toDF("id", "user_id", "v"),
         delta = true)
-      assert(t.readLookup("user_id", Seq(999L))
-        .collect().map(_.getLong(0)).toSeq === Seq(12L))
-      assert(!t.readLookup("user_id", Seq(3L))
-        .collect().map(_.getLong(0)).contains(12L))
+      assert(lookup(999L).collect().map(_.getLong(0)).toSeq === Seq(12L))
+      assert(!lookup(3L).collect().map(_.getLong(0)).contains(12L))
 
       // erasure through the lookup path, then compaction in a session
       // with NO conf set: the manifest declaration keeps blooms coming
-      val victims = t.readLookup("user_id", Seq(3L))
+      val victims = lookup(3L)
       t.merge(victims.withColumn("__op", lit("d")),
         opCol = Some("__op"), delta = true)
       t.compact()
       val snap2 = t.currentSnapshot.get
       assert(snap2.files.forall(_.blooms.contains("user_id")),
         "compaction must keep collecting blooms from the manifest declaration")
-      assert(t.readLookup("user_id", Seq(3L)).count() === 0L)
+      assert(lookup(3L).count() === 0L)
       assert(t.read().count() === 512L - 3L) // 4 rows minus re-keyed 12
     } finally spark.conf.unset(UpsertTable.LookupBloomsConf)
   }
@@ -123,15 +125,18 @@ class LookupBloomSpec extends AnyFunSuite {
       }
 
       // lookups admit exactly the files those blooms admit (deltas
-      // always), present and absent values alike
+      // always), present and absent values alike: the planner's bloom
+      // check alone, over the entries without their column bounds
+      val unbounded = StoreFileIndex(spark, dir, snap, snap.files.map(_.copy(stats = Map.empty)))
+      def admitted(c: String, v: Any) = unbounded.select(Seq(In(c, Array(v)))).map(_.path).toSet
       Seq[Any](3L, 500L, 9000L, 123456L).foreach { v =>
-        assert(t.lookupFiles("user_id", Seq(v)).map(_.path).toSet ===
+        assert(admitted("user_id", v) ===
           snap.files.filter(f => FileEntry.isDelta(f) ||
             built(f.path)("user_id").mightContainLong(v.asInstanceOf[Long]))
             .map(_.path).toSet)
       }
       Seq("u3@example.com", "nobody@example.com").foreach { v =>
-        assert(t.lookupFiles("email", Seq(v)).map(_.path).toSet ===
+        assert(admitted("email", v) ===
           snap.files.filter(f => FileEntry.isDelta(f) ||
             built(f.path)("email").mightContainString(v)).map(_.path).toSet)
       }

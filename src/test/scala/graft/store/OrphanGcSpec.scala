@@ -20,7 +20,7 @@ class OrphanGcSpec extends AnyFunSuite {
   private def planted(t: UpsertTable, name: String, ageMs: Long): String = {
     // simulate a lost commit attempt: a real parquet file inside an
     // unpublished attempt directory
-    val live = t.dataFiles().head // absolute path
+    val live = s"${t.location}/${t.currentSnapshot.get.files.head.path}"
     val dir = Paths.get(t.location, "data", name, "__bucket=0")
     Files.createDirectories(dir)
     val f = dir.resolve("part-orphan.parquet")
@@ -55,7 +55,8 @@ class OrphanGcSpec extends AnyFunSuite {
     assert(!Files.exists(Paths.get(t.location).resolve(old)))
     assert(Files.exists(Paths.get(t.location).resolve(fresh)))
     // every referenced file still present; reads identical
-    t.dataFiles().foreach(f => assert(Files.exists(Paths.get(f)), f))
+    t.currentSnapshot.get.files.foreach(f =>
+      assert(Files.exists(Paths.get(t.location, f.path)), f.path))
     assert(t.read().orderBy("user_id").collect().toSeq === before)
 
     // idempotent: nothing old remains

@@ -9,6 +9,7 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.TestSpark.selectPaths
 
 /** Property: file skipping is SOUND for any pushed predicate — a file
   * dropped by [[FileStats.mightMatch]] contains NO row matching the
@@ -65,10 +66,10 @@ class SkippingPropertySpec extends AnyFunSuite {
   }
 
   test("pruned scan == full scan for any pushed predicate (soundness)") {
-    val all = table.dataFiles()
+    val all = selectPaths(table)
     assert(all.size > 3, s"fixture produced only ${all.size} files")
     val prop = Prop.forAll(genCase) { case (filter, pred, label) =>
-      val kept = table.dataFiles(filters = Seq(filter))
+      val kept = selectPaths(table, filter)
       val full = spark.read.parquet(all: _*).where(pred).count()
       val pruned =
         if (kept.isEmpty) 0L
@@ -87,9 +88,8 @@ class SkippingPropertySpec extends AnyFunSuite {
     // guard against the property passing vacuously because mightMatch
     // degraded to always-true: a tight point predicate on the leading
     // z-column must prune on a 32-rows-per-file layout
-    val kept = table.dataFiles(filters =
-      Seq(sources.EqualTo("a", 0L)))
-    assert(kept.size < table.dataFiles().size,
+    val kept = selectPaths(table, sources.EqualTo("a", 0L))
+    assert(kept.size < selectPaths(table).size,
       "EqualTo on the leading z-column pruned nothing")
   }
 }

@@ -3,18 +3,19 @@ package graft.store
 import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.TestSpark.filesRead
 import graft.catalog.GraftCatalog
 
 /** Store reads are planned from the manifest ([[StoreFileIndex]]):
   * planning a read launches no Spark job however many files it spans,
   * and a key lookup on a delta-bearing table overlays only the key's
   * bucket under each live spec, returning exactly the rows of the
-  * unpruned read.
+  * unpruned read — as do key `IN` lists and ranges, `read().where` and
+  * lookup-bloom `IN`s, each opening fewer files than the snapshot holds.
   */
 class StoreReadPlanSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -39,15 +40,6 @@ class StoreReadPlanSpec extends AnyFunSuite {
   /** Jobs started while `read` is analyzed and planned. */
   private def planningJobs(read: => DataFrame): Seq[String] =
     TestSpark.jobsDuring(read.queryExecution.executedPlan)
-
-  /** Data files the file scans of `df`'s plan read. */
-  private def filesRead(df: DataFrame): Int =
-    df.queryExecution.optimizedPlan.collect {
-      case l: LogicalRelation => l.relation match {
-        case h: HadoopFsRelation => h.location.inputFiles.length
-        case _ => 0
-      }
-    }.sum
 
   private def rows(df: DataFrame): Set[(Long, Long)] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
@@ -95,7 +87,9 @@ class StoreReadPlanSpec extends AnyFunSuite {
 
   test("a key lookup on a delta-bearing table reads the key's bucket per " +
       "live spec and returns the unpruned read's rows") {
-    val t = table("lookup", 4)
+    // `v` carries lookup blooms, for the bloom-column IN below
+    spark.conf.set(UpsertTable.LookupBloomsConf, "v")
+    val t = try table("lookup", 4) finally spark.conf.unset(UpsertTable.LookupBloomsConf)
     val name = "graft_rp.rp.lookup"
     t.merge((1L to 60L).map(i => (i, i)).toDF("id", "v"))
     // 70 only ever lives in deltas; 5 (base) and 70 end as tombstones
@@ -111,17 +105,33 @@ class StoreReadPlanSpec extends AnyFunSuite {
     val snap = t.currentSnapshot.get
     assert(snap.hasDeltas && snap.files.exists(_.spec == 4))
 
+    val all = rows(t.read().select("id", "v"))
     val keys = Seq(1L, 3L, 5L, 9L, 11L, 12L, 33L, 60L, 70L, 80L, 99L)
     keys.foreach { k =>
       val pruned = spark.sql(s"SELECT id, v FROM $name WHERE id = $k")
-      val unpruned = t.read().where($"id" === k).select("id", "v")
-      assert(rows(pruned) === rows(unpruned), s"key $k")
+      assert(rows(pruned) === all.filter(_._1 == k), s"key $k")
       assert(filesRead(pruned) < snap.files.size, s"key $k read every file")
+    }
+    val reads = Seq[(String, DataFrame, ((Long, Long)) => Boolean)](
+      ("IN", spark.sql(s"SELECT id, v FROM $name WHERE id IN (3, 5, 70)"),
+        r => Set(3L, 5L, 70L)(r._1)),
+      ("BETWEEN", spark.sql(s"SELECT id, v FROM $name WHERE id BETWEEN 61 AND 90"),
+        r => r._1 >= 61 && r._1 <= 90),
+      ("read().where", t.read().where($"id" === 70L).select("id", "v"), _._1 == 70L),
+      ("bloom IN", spark.sql(s"SELECT id, v FROM $name WHERE v IN (12, 701)"),
+        r => r._2 == 12L || r._2 == 701L))
+    reads.foreach { case (label, df, want) =>
+      assert(rows(df) === all.filter(want), label)
+      val opened = filesRead(df)
+      assert(opened < snap.files.size, s"$label opened $opened of ${snap.files.size} files")
     }
     assert(rows(spark.sql(s"SELECT id, v FROM $name WHERE id = 5")).isEmpty)
     assert(rows(spark.sql(s"SELECT id, v FROM $name WHERE id = 11")).isEmpty)
     assert(rows(spark.sql(s"SELECT id, v FROM $name WHERE 70 = id")) === Set(70L -> 701L))
     assert(rows(spark.sql(s"SELECT id, v FROM $name WHERE id = 3 AND v > 0")) ===
+      Set(3L -> 31L))
+    // a non-deterministic conjunct stays above the overlay
+    assert(rows(spark.sql(s"SELECT id, v FROM $name WHERE id = 3 AND rand() < 2")) ===
       Set(3L -> 31L))
   }
 }

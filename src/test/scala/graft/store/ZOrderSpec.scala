@@ -7,6 +7,7 @@ import org.apache.spark.sql.sources.{EqualTo, GreaterThan}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.TestSpark.selectFiles
 
 class ZOrderSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -66,12 +67,12 @@ class ZOrderSpec extends AnyFunSuite {
     // each 256-row file is one 16x16 quadrant, so a point predicate on
     // either column keeps exactly the 4 quadrant-files in its strip
     val all = snap.files.size
-    val hit = t.dataFiles(filters = Seq(EqualTo("x", 3L))).size
+    val hit = selectFiles(t, EqualTo("x", 3L)).size
     assert(hit === 4, s"x=3 should scan its 4 quadrant-files of $all, got $hit")
-    val hitY = t.dataFiles(filters = Seq(EqualTo("y", 60L))).size
+    val hitY = selectFiles(t, EqualTo("y", 60L)).size
     assert(hitY === 4, s"y=60 should scan its 4 quadrant-files of $all, got $hitY")
     // a range predicate covering everything keeps every file
-    assert(t.dataFiles(filters = Seq(GreaterThan("x", -1L))).size === all)
+    assert(selectFiles(t, GreaterThan("x", -1L)).size === all)
   }
 
   test("cluster folds outstanding deltas into clustered base files") {
